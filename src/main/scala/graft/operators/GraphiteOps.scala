@@ -191,32 +191,22 @@ object GraphiteOps {
       .groupBy(col("date"), col("path"))
       .agg(max(col("version")).as("version"))
 
+    // every index row of a series comes from one explode of one array,
+    // so the series shuffle is read once (a union of per-kind selects
+    // reads it once per kind, in stages of their own)
     val level = pathLevel(col("path"))
     val revPath = pathReverse(col("path"))
-    val tree = series.select(
-      lit(treeDate).as("date"),
-      (level + 20000L).as("level"),
-      col("path"),
-      col("version"))
-    val treeRev = series.select(
-      lit(treeDate).as("date"),
-      (level + 30000L).as("level"),
-      revPath.as("path"),
-      col("version"))
-    val prefixes = series
-      .select(explode(treePrefixes(col("path"))).as("p"), col("version"))
-      .select(lit(treeDate).as("date"), (col("p.level") + 20000L).as("level"),
-        col("p.prefix").as("path"), col("version"))
-
-    val treeAll = tree.union(treeRev).union(prefixes)
-    val all =
-      if (disableDailyIndex) treeAll
-      else {
-        val daily = series.select(col("date"), level.as("level"), col("path"), col("version"))
-        val dailyRev = series.select(col("date"), (level + 10000L).as("level"), revPath.as("path"), col("version"))
-        treeAll.union(daily).union(dailyRev)
-      }
-    all.groupBy("date", "level", "path").agg(max("version").as("version"))
+    val tree = lit(treeDate)
+    def row(date: Column, lvl: Column, path: Column) =
+      struct(date.as("date"), lvl.as("level"), path.as("path"))
+    val direct = Seq(row(tree, level + 20000L, col("path")), row(tree, level + 30000L, revPath)) ++
+      (if (disableDailyIndex) Nil
+       else Seq(row(col("date"), level, col("path")), row(col("date"), level + 10000L, revPath)))
+    val prefixes = transform(treePrefixes(col("path")), p => row(tree, p("level") + 20000L, p("prefix")))
+    series
+      .select(explode(concat(array(direct: _*), prefixes)).as("r"), col("version"))
+      .groupBy(col("r.date").as("date"), col("r.level").as("level"), col("r.path").as("path"))
+      .agg(max(col("version")).as("version"))
   }
 
   /**

@@ -156,7 +156,7 @@ object IngestMain {
     // (carbon-clickhouse.go:146-148); unavailable JVMs just skip it
     scala.util.Try(sun.misc.Signal.handle(new sun.misc.Signal("USR1"),
       (_: sun.misc.Signal) => ingest.clearExistsCache()))
-    spark.streams.addListener(new IngestMetricsListener(spool))
+    spark.streams.addListener(new IngestMetricsListener(spool, cacheStats = () => ingest.existsCacheStats))
     if (once) {
       spool.rotate()
       ingest.runAvailableNow()

@@ -8,12 +8,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
  * duration, processed-rows rate) back into the spool as metric points —
  * the Spark half of the reference's collector (carbon/collector.go
  * gathers writer/uploader module stats alongside the receiver
- * counters; SURVEY §2.1 maps it to exactly this listener).
+ * counters; SURVEY §2.1 maps it to exactly this listener). With
+ * `cacheStats` (e.g. `StreamingIngest.existsCacheStats`) it also writes
+ * each exists-cache's new keys and live entries after the batch, as
+ * `<prefix>.<table>.cacheNew` and `<prefix>.<table>.cacheEntries`.
  */
 final class IngestMetricsListener(
     spool: SpoolWriter,
     prefix: String = "carbon.agents.graft.stream",
-    clock: () => Long = () => System.currentTimeMillis() / 1000
+    clock: () => Long = () => System.currentTimeMillis() / 1000,
+    cacheStats: () => Seq[(String, ExistsCache.Stats)] = () => Nil
 ) extends StreamingQueryListener {
 
   override def onQueryStarted(event: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -27,5 +31,9 @@ final class IngestMetricsListener(
       if (p.processedRowsPerSecond.isNaN) 0.0 else p.processedRowsPerSecond, now, now)
     Option(p.batchDuration).foreach(d =>
       spool.write(s"$prefix.batchDurationMs", d.toDouble, now, now))
+    for ((table, st) <- cacheStats()) {
+      spool.write(s"$prefix.$table.cacheNew", st.added.toDouble, now, now)
+      spool.write(s"$prefix.$table.cacheEntries", st.entries.toDouble, now, now)
+    }
   }
 }

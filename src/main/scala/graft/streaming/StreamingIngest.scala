@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -17,7 +19,7 @@ import graft.operators.GraphiteOps
  *   spool chunks            = writer/writer.go chunk files
  *   micro-batch trigger     = 1 s chunk rotation cadence
  *   foreachBatch fan-out    = symlink fan-out to N uploaders
- *   TTL-bounded anti-join   = cross-chunk exists-cache (uploader/cmap.go)
+ *   ExistsCache per table   = cross-chunk exists-cache (uploader/cmap.go)
  *   clearExistsCache()      = SIGUSR1 cache clear (carbon-clickhouse.go:146)
  *   checkpoint dir          = done-marker / LinkAll crash recovery
  *
@@ -28,14 +30,22 @@ import graft.operators.GraphiteOps
  * a transactional format. Readers see the batch dirs as one partitioned
  * table.
  *
- * Exists-cache scale design: index/tagged rows are partitioned by
- * `udate` (receive-time day). The per-batch anti-join reads ONLY
- * partitions with `udate >= today - cacheTtlDays` (statically pruned),
- * so its cost tracks series churn within the TTL window, not total
- * index history. A series silent for longer than the TTL is re-emitted
- * with a newer version — exactly the reference's cache-ttl semantics
- * (uploader/cmap.go:97-141) — and absorbed by the last-write-wins read
- * views.
+ * Exists-cache scale design: each expansion table (index, tagged, each
+ * enabled legacy table) has one driver-resident [[ExistsCache]], the
+ * reference's CMap (uploader/cmap.go:10-141). A batch collects its own
+ * distinct expansion rows to the driver (at most one row per expansion
+ * key of the batch: that is the driver-side bound), keeps the rows whose
+ * key no live bucket holds, and writes only those. Keys enter the cache
+ * only after every write of the batch succeeded (uploader/cached.go:
+ * 108-110). Buckets are `udate` (receive-time) days; a bucket older than
+ * `today - cacheTtlDays` expires whole, so memory is the live keys within
+ * the TTL per table, and a series silent for longer than the TTL is
+ * re-emitted with a newer version, absorbed by the last-write-wins read
+ * views (uploader/cmap.go:97-141). Replay rule: a batch re-run under the
+ * same id ignores the entries it wrote itself, so it rewrites its own
+ * `batch=b<id>` dir in full. Restart: the first batch of a new instance
+ * seeds the caches once from the tables, reading only partitions with
+ * `udate >= today - cacheTtlDays`, so a restart re-emits nothing.
  */
 final class StreamingIngest(
     spark: SparkSession,
@@ -54,8 +64,8 @@ final class StreamingIngest(
     compactEveryBatches: Option[Int] = None, // online fold cadence; None = off
     treeDate: Option[java.sql.Date] = None // tree-row date; None = day 42
 ) {
-  require(legacyTables.subsetOf(Set("tree", "series", "series-reverse")),
-    s"unknown legacy table types: ${legacyTables -- Set("tree", "series", "series-reverse")}")
+  require(legacyTables.subsetOf(StreamingIngest.LegacyTypes),
+    s"unknown legacy table types: ${legacyTables -- StreamingIngest.LegacyTypes}")
 
   private val spoolSchema = StructType(Seq(
     StructField("path", StringType),
@@ -69,12 +79,13 @@ final class StreamingIngest(
   private def taggedPath = s"$tablesDir/tagged"
   private def legacyPath(typ: String) = s"$tablesDir/${typ.replace('-', '_')}"
 
-  /** SIGUSR1 equivalent: the next micro-batch skips the exists-cache
-    * anti-join and re-emits every series it sees (duplicates are
+  /** SIGUSR1 equivalent: the next micro-batch starts from empty
+    * exists-caches and re-emits every series it sees (duplicates are
     * harmless under the LWW read views — same contract as the
-    * reference's cache clear). */
-  @volatile private var cacheClearRequested = false
-  def clearExistsCache(): Unit = cacheClearRequested = true
+    * reference's cache clear). The maps are emptied on the stream
+    * thread, so a clear never races a batch's lookups. */
+  private val cacheClearRequested = new java.util.concurrent.atomic.AtomicBoolean(false)
+  def clearExistsCache(): Unit = cacheClearRequested.set(true)
 
   /** The streaming source: completed spool chunks as a CSV stream.
     * cleanSource=delete removes consumed chunks (the reference's
@@ -138,65 +149,112 @@ final class StreamingIngest(
   private def ttlCutoff: java.sql.Date =
     java.sql.Date.valueOf(java.time.LocalDate.now(java.time.ZoneOffset.UTC).minusDays(cacheTtlDays.toLong))
 
-  /** Exists-cache view: the key columns of rows uploaded within the TTL
-    * window. The literal udate filter prunes table partitions at plan
-    * time — this scan must NOT grow with total index history.
-    *
-    * `excludeBatch` removes the CURRENT batch's own (possibly partial)
-    * previous output from the cache view: a replayed batch overwrites
-    * its own dir, so anti-joining against it would both suppress rows
-    * it is about to rewrite and trust keys from a half-written failure.
-    */
-  private[streaming] def existingKeysWithinTtl(path: String, keys: StructType,
-                                               excludeBatch: Option[Long] = None): DataFrame =
+  /** The restart seed of an exists-cache: the key columns, `udate` and
+    * `batch` dir of rows uploaded within the TTL window. The literal
+    * udate filter prunes table partitions at plan time — this scan must
+    * NOT grow with total index history. */
+  private[streaming] def existingKeysWithinTtl(path: String, keys: StructType): DataFrame = {
+    val withDir = StructType(keys.fields ++ Seq(
+      StructField("udate", DateType), StructField("batch", StringType)))
     if (!tableExists(path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keys)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withDir)
     else
-      try {
-        val base = spark.read.parquet(path).filter(col("udate") >= lit(ttlCutoff))
-        val scoped = excludeBatch.fold(base)(id => base.filter(col("batch") =!= lit(s"b$id")))
-        scoped.select(keys.fieldNames.map(col).toSeq: _*)
-      } catch {
+      try spark.read.parquet(path).filter(col("udate") >= lit(ttlCutoff))
+        .select(withDir.fieldNames.map(col).toSeq: _*)
+      catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keys)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withDir)
       }
+  }
 
   private def keysOf(s: StructType, names: String*): StructType =
     StructType(names.map(n => s(n)))
 
+  /** One expansion table: its root, its key columns and its exists-cache. */
+  private final class Expansion(val root: String, val keys: StructType) {
+    val name: String = new org.apache.hadoop.fs.Path(root).getName
+    val cache = new ExistsCache
+    def keyCols: Seq[String] = keys.fieldNames.toSeq
+  }
+
+  private val indexExp = new Expansion(indexPath, keysOf(indexSchema, "date", "level", "path"))
+  private val taggedExp = new Expansion(taggedPath, keysOf(taggedSchema, "date", "tag1", "path"))
+  private val legacyExps = legacyTables.toSeq.sorted.map(typ =>
+    typ -> new Expansion(legacyPath(typ), keysOf(indexSchema, "date", "level", "path")))
+  private def expansions: Seq[Expansion] = indexExp +: taggedExp +: legacyExps.map(_._2)
+  private var cachesSeeded = false
+
+  /** Each exists-cache's counters for the last committed batch, by table
+    * (`index`, `tagged`, `tree`, `series`, `series_reverse`). */
+  def existsCacheStats: Seq[(String, ExistsCache.Stats)] = expansions.map(e => e.name -> e.cache.stats)
+
   /**
-   * Exists-cache anti-join for one expansion table. With
+   * Exists-cache key of an expansion row: the composite key, or with
    * `hashCacheKeys` (the reference's `hash = "city64"` option,
-   * uploader/hash.go:9-25) both sides join on the 8-byte xxhash64 of
-   * the composite key instead of the full strings — a smaller shuffle
+   * uploader/hash.go:9-25) its 8-byte xxhash64 — less memory per entry
    * at the same accepted risk: a hash collision suppresses a genuinely
    * new series row.
    */
-  private def dedupAgainstExisting(rows: DataFrame, tablePath: String, keys: StructType,
-                                   batchId: Long, clearCache: Boolean): DataFrame =
-    if (clearCache) rows
-    else {
-      val keyNames = keys.fieldNames.toSeq
-      val existing = existingKeysWithinTtl(tablePath, keys, Some(batchId))
-      if (!hashCacheKeys) rows.join(existing, keyNames, "left_anti")
-      else {
-        def hashed(df: DataFrame) =
-          df.withColumn("_k", xxhash64(concat_ws("\u0000", keyNames.map(col): _*)))
-        hashed(rows).join(hashed(existing).select("_k"), Seq("_k"), "left_anti").drop("_k")
+  private def cacheKey(e: Expansion): Column = {
+    val composite = concat_ws("\u0000", e.keyCols.map(col): _*)
+    if (hashCacheKeys) xxhash64(composite) else composite
+  }
+
+  /** Restart: fill one cache from the keys its table holds within the
+    * TTL. Entries keep the id of the `batch=b<id>` dir they were read
+    * from, so the replay rule also holds for the first batch after a
+    * restart; compacted dirs hold only older, committed batches. */
+  private def seed(e: Expansion): Unit = {
+    e.cache.clear()
+    existingKeysWithinTtl(e.root, e.keys)
+      .select(cacheKey(e), unix_date(col("udate")), col("batch"))
+      .collect()
+      .foreach { r =>
+        val dir = r.getString(2)
+        val writer = if (dir.startsWith("b")) dir.drop(1).toLong else -1L
+        e.cache.add(r.getInt(1), r.get(0), writer)
       }
+  }
+
+  /** What one expansion write leaves for the commit step. */
+  private final class Written(val e: Expansion, val keys: Seq[(Int, Any)], val checked: Long)
+
+  /**
+   * Writes the rows of `rows` (one per expansion key) that the table's
+   * exists-cache does not hold into this batch's dir, clustered by key.
+   * With nothing new, the batch's own dir is removed instead, so a
+   * replay never leaves a stale partial output and no write job runs.
+   */
+  private def writeNew(rows: DataFrame, e: Expansion, batchId: Long): Written = {
+    val n = rows.schema.length
+    val collected = rows.select(col("*"), cacheKey(e), unix_date(col("udate"))).collect()
+    val fresh = collected.filterNot(r => e.cache.contains(r.get(n), batchId))
+    if (fresh.isEmpty) {
+      val dir = new org.apache.hadoop.fs.Path(s"${e.root}/batch=b$batchId")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    } else {
+      val out = fresh.toSeq.map(r => Row.fromSeq(r.toSeq.take(n)))
+      // one task: a batch's new keys make one file per udate
+      writeBatch(spark.createDataFrame(out.asJava, rows.schema).coalesce(1), e.root, batchId,
+        Seq("udate"), sortCols = "udate" +: e.keyCols)
     }
+    new Written(e, fresh.toSeq.map(r => (r.getInt(n + 1), r.get(n))), collected.length.toLong)
+  }
 
   /**
    * One micro-batch: fan the canonical points out to all tables.
    *
-   * The single driver action per batch is one stats aggregate over the
+   * The first driver action per batch is one stats aggregate over the
    * cached batch (materializing the cache in the process); it gates
    * empty batches and lets the tagged/legacy writes be skipped when
    * the batch carries no rows for them. The per-table writes then run
    * CONCURRENTLY — the reference uploads tables from parallel
    * per-uploader threads (uploader/base.go:65-214), and the jobs are
-   * independent appends over the shared cached batch. A failure in any
-   * write fails the batch; the replay overwrites the same batch dirs.
+   * independent appends over the shared cached batch; each expansion
+   * table collects its rows and checks them against its exists-cache
+   * (see [[writeNew]]). A failure in any write fails the batch and
+   * commits nothing to the caches; the replay overwrites the same batch
+   * dirs.
    */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val pts = GraphiteOps.withDate(batch, utcDate).cache()
@@ -209,76 +267,59 @@ final class StreamingIngest(
       val nTagged = if (stats.isNullAt(1)) 0L else stats.getLong(1)
       val nPlain = n - nTagged
 
-      val clearCache = cacheClearRequested
-      if (clearCache) cacheClearRequested = false
+      // cache maintenance runs here, on the stream thread, before any
+      // lookup: a requested clear wins over the one-time restart seed
+      if (cacheClearRequested.getAndSet(false)) { expansions.foreach(_.cache.clear()); cachesSeeded = true }
+      else if (!cachesSeeded) { expansions.foreach(seed); cachesSeeded = true }
+      val cutoffDay = ttlCutoff.toLocalDate.toEpochDay.toInt
+      expansions.foreach(_.cache.expire(cutoffDay))
 
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = StreamingIngest.writePool
 
-      val tasks = Seq.newBuilder[Future[Unit]]
-      tasks += Future(writeBatch(
-        GraphiteOps.points(pts, blacklist, reverse = false, zeroTimestamp = true)
+      val pointWrites = Seq(false, true).map(reverse => Future(writeBatch(
+        GraphiteOps.points(pts, blacklist, reverse = reverse, zeroTimestamp = true)
           .withColumn("month", date_format(col("date"), "yyyyMM")),
-        pointsPath, batchId, Seq("month"), sortCols = Seq("path", "time")))
-      tasks += Future(writeBatch(
-        GraphiteOps.points(pts, blacklist, reverse = true, zeroTimestamp = true)
-          .withColumn("month", date_format(col("date"), "yyyyMM")),
-        pointsReversePath, batchId, Seq("month"), sortCols = Seq("path", "time")))
+        if (reverse) pointsReversePath else pointsPath, batchId, Seq("month"), sortCols = Seq("path", "time"))))
 
-      // Exists-cache semantics: only rows whose key is not already in the
-      // TTL window of the accumulated table survive the anti-join.
-      // Committed only after a successful write (cached.go:108-110).
-      if (nPlain > 0) tasks += Future {
-        val newIndex = GraphiteOps
-          .indexExpandVersioned(pts,
-            treeDate = treeDate.getOrElse(graft.core.Dates.daysToDate(graft.core.Dates.DefaultTreeDate)),
-            disableDailyIndex = disableDailyIndex)
-          .withColumn("udate", udateCol)
-        writeBatch(
-          dedupAgainstExisting(newIndex, indexPath,
-            keysOf(indexSchema, "date", "level", "path"), batchId, clearCache),
-          indexPath, batchId, Seq("udate"))
-      }
-
-      if (nTagged > 0) tasks += Future {
-        val newTagged = GraphiteOps
-          .taggedExpandVersioned(pts, ignoredTaggedMetrics)
-          .withColumn("udate", udateCol)
-        writeBatch(
-          dedupAgainstExisting(newTagged, taggedPath,
-            keysOf(taggedSchema, "date", "tag1", "path"), batchId, clearCache),
-          taggedPath, batchId, Seq("udate"))
-      }
-
-      // legacy graphite-web table types (uploader/uploader.go:47-64),
-      // same exists-cache + per-batch-dir machinery as the modern index
-      if (nPlain > 0) for (typ <- legacyTables) tasks += Future {
-        val rows = (typ match {
-          case "tree"           => GraphiteOps.treeExpandVersioned(pts,
-            treeDate.getOrElse(graft.core.Dates.daysToDate(graft.core.Dates.DefaultTreeDate)))
-          case "series"         => GraphiteOps.seriesExpandVersioned(pts, reverse = false)
-          case "series-reverse" => GraphiteOps.seriesExpandVersioned(pts, reverse = true)
-        }).withColumn("udate", udateCol)
-        writeBatch(
-          dedupAgainstExisting(rows, legacyPath(typ),
-            keysOf(indexSchema, "date", "level", "path"), batchId, clearCache),
-          legacyPath(typ), batchId, Seq("udate"))
-      }
+      val tree = treeDate.getOrElse(graft.core.Dates.daysToDate(graft.core.Dates.DefaultTreeDate))
+      def expand(e: Expansion)(rows: => DataFrame) =
+        Future(writeNew(rows.withColumn("udate", udateCol), e, batchId))
+      val plain = if (nPlain == 0) Nil else
+        expand(indexExp)(GraphiteOps.indexExpandVersioned(pts, tree, disableDailyIndex)) +:
+          // legacy graphite-web table types (uploader/uploader.go:47-64),
+          // same exists-cache + per-batch-dir machinery as the modern index
+          legacyExps.map { case (typ, e) => expand(e)(typ match {
+            case "tree"           => GraphiteOps.treeExpandVersioned(pts, tree)
+            case "series"         => GraphiteOps.seriesExpandVersioned(pts, reverse = false)
+            case "series-reverse" => GraphiteOps.seriesExpandVersioned(pts, reverse = true)
+          }) }
+      val tagged = if (nTagged == 0) Nil else
+        Seq(expand(taggedExp)(GraphiteOps.taggedExpandVersioned(pts, ignoredTaggedMetrics)))
+      val expansionWrites = plain ++ tagged
 
       // drain EVERY write before surfacing a failure: rethrowing while a
       // sibling job is still writing would let the batch retry overwrite
       // a dir a zombie task is concurrently appending to
-      val results = tasks.result().map(f =>
+      val results = (pointWrites ++ expansionWrites).map(f =>
         Await.ready(f, Duration.Inf).value.get)
       results.collectFirst { case scala.util.Failure(e) => throw e }
+
+      // only now, with every table written, do the batch's keys enter
+      // the exists-caches (uploader/cached.go:108-110)
+      val written = expansionWrites.map(_.value.get.get).map(w => w.e -> w).toMap
+      expansions.foreach(e => written.get(e) match {
+        case Some(w) => e.cache.commit(w.keys, w.checked, batchId)
+        case None    => e.cache.commit(Nil, 0L, batchId)
+      })
 
       // Online compaction (ClickHouse background-merge analogue): every
       // N batches, fold the batch dirs STRICTLY OLDER than this batch —
       // they are checkpoint-committed and immutable (this stream is the
       // only writer and writes only b<batchId>), so no quiesce is
-      // needed. Runs on the stream thread, so the next batch's
-      // exists-cache scan never races a dir rename. Keeps dir count —
+      // needed. Runs on the stream thread, between batches, so no table
+      // write races a dir rename. Keeps dir count —
       // and with it per-batch file-listing cost — bounded under
       // continuous 1 s ingest.
       if (compactEveryBatches.exists(n => n > 0 && batchId > 0 && batchId % n == 0))
@@ -411,13 +452,16 @@ final class StreamingIngest(
 }
 
 object StreamingIngest {
+  private val LegacyTypes = Set("tree", "series", "series-reverse")
+
   /** Shared pool for the concurrent per-table batch writes (the
     * reference's per-uploader threads). Daemon threads; sized for the
-    * table fan-out, not the cluster — each task is a Spark job whose
-    * parallelism comes from the executors. */
+    * largest table fan-out of a batch (points, points_reverse, index,
+    * tagged and every legacy table), not the cluster — each task is a
+    * Spark job whose parallelism comes from the executors. */
   private[streaming] lazy val writePool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
+      java.util.concurrent.Executors.newFixedThreadPool(4 + LegacyTypes.size, r => {
         val t = new Thread(r, "graft-table-writer")
         t.setDaemon(true)
         t

@@ -11,8 +11,9 @@ import org.scalatest.BeforeAndAfterAll
 
 /**
  * Scale-behavior specs for the streaming ingest: TTL-bounded
- * exists-cache (re-emission after expiry + partition-pruned anti-join
- * scan), idempotent batch replay, cache clear, and table compaction.
+ * exists-cache (re-emission after expiry, partition-pruned restart seed
+ * scan, commit only after a batch's writes, per-batch counters),
+ * idempotent batch replay, cache clear, and table compaction.
  */
 class IngestScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -227,6 +228,98 @@ class IngestScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ingest.indexTable().count() == idx)
   }
 
+  private def pointsDf(rows: Seq[(String, Double, Long, Long)]) = {
+    val ss = spark; import ss.implicits._
+    rows.toDF("path", "value", "time", "version")
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("a failed batch commits nothing to the exists-cache; its replay writes every row") {
+    val now = nowSec
+    val first = pointsDf(Seq(("fault.a.b", 1.0, 1625478240L, now)))
+    val batch = pointsDf(Seq(
+      ("fault.a.b", 2.0, 1625478300L, now),
+      ("fault.c.d", 3.0, 1625478300L, now),
+      ("fault.tagged?dc=x&env=prod", 4.0, 1625478300L, now)))
+
+    // a regular file where the tagged table's root should be makes the
+    // tagged write of batch 7 throw after the index write succeeded
+    def failBatch7(work: String, ingest: StreamingIngest): Unit = {
+      ingest.processBatch(first, 6L) // seeds the caches; plain only, so no tagged dir
+      val blocker = java.nio.file.Paths.get(s"$work/tables/tagged")
+      Files.write(blocker, "not a dir".getBytes)
+      intercept[Exception](ingest.processBatch(batch, 7L))
+      assert(Files.exists(java.nio.file.Paths.get(s"$work/tables/index/batch=b7")),
+        "the index write of the failed attempt ran")
+      Files.delete(blocker)
+    }
+    def ofBatch(table: String, id: Long) =
+      sortedRows(spark.read.parquet(table).filter(col("batch") === s"b$id").drop("batch"))
+
+    val (ingest, work) = freshIngest()
+    failBatch7(work, ingest)
+    ingest.processBatch(batch, 7L)
+
+    val (clean, cleanWork) = freshIngest()
+    clean.processBatch(first, 6L)
+    clean.processBatch(batch, 7L)
+    val idx7 = ofBatch(s"$work/tables/index", 7L)
+    assert(idx7.nonEmpty && idx7 == ofBatch(s"$cleanWork/tables/index", 7L),
+      "the replay must write every index row of batch 7")
+    val tagged7 = ofBatch(s"$work/tables/tagged", 7L)
+    assert(tagged7.size == 3 && tagged7 == ofBatch(s"$cleanWork/tables/tagged", 7L),
+      "the replay must write every tagged row of batch 7 (__name__, dc, env)")
+    assert(sortedRows(ingest.indexLatest()) == sortedRows(clean.indexLatest()))
+    assert(sortedRows(ingest.taggedLatest()) == sortedRows(clean.taggedLatest()))
+
+    // a replay under the same id ignores the batch's own entries, so it
+    // cannot tell whether the failed attempt committed; a later id can:
+    // its rows are all still new only if the failed attempt committed none
+    val (probe, probeWork) = freshIngest()
+    failBatch7(probeWork, probe)
+    probe.processBatch(batch, 8L)
+    assert(ofBatch(s"$probeWork/tables/index", 8L) == idx7, "a failed batch must commit none of its index keys")
+    assert(ofBatch(s"$probeWork/tables/tagged", 8L) == tagged7, "a failed batch must commit none of its tagged keys")
+  }
+
+  test("a restarted instance seeds its exists-caches once and re-emits nothing") {
+    val now = nowSec
+    val series = Seq(("restart.seed.a", 1.0, 1625478240L, now), ("restart.seed.b", 2.0, 1625478240L, now),
+      ("restart.seed?host=h1", 3.0, 1625478240L, now))
+    val work = Files.createTempDirectory("graft-seed").toString
+    def ingest() = new StreamingIngest(spark, s"$work/spool", s"$work/tables", s"$work/ckpt")
+    ingest().processBatch(pointsDf(series), 0L)
+    val idx = ingest().indexTable().count()
+    val tagged = ingest().taggedTable().count()
+    assert(idx > 0 && tagged == 2)
+
+    val restarted = ingest()
+    restarted.processBatch(pointsDf(series.map { case (p, v, t, ver) => (p, v + 1, t + 60, ver) }), 1L)
+    assert(restarted.indexTable().count() == idx, "restart must not re-emit index rows within the TTL")
+    assert(restarted.taggedTable().count() == tagged, "restart must not re-emit tagged rows within the TTL")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$work/tables/index/batch=b1")) &&
+      !Files.exists(java.nio.file.Paths.get(s"$work/tables/tagged/batch=b1")),
+      "a batch with no new keys writes no expansion dir")
+    assert(restarted.pointsTable().count() == 6)
+  }
+
+  test("exists-cache counters: first batch all new, identical second batch all hits") {
+    val (ingest, _) = freshIngest()
+    val now = nowSec
+    val batch = pointsDf(Seq(("count.a.b", 1.0, 1625478240L, now), ("count.c?dc=x", 2.0, 1625478240L, now)))
+    ingest.processBatch(batch, 0L)
+    val first = ingest.existsCacheStats.toMap
+    val idxKeys = ingest.indexTable().count()
+    assert(first("index") == ExistsCache.Stats(idxKeys, idxKeys, idxKeys), s"batch 0: ${first("index")}")
+    assert(first("tagged") == ExistsCache.Stats(2L, 2L, 2L), s"batch 0: ${first("tagged")}")
+    ingest.processBatch(batch, 1L)
+    val second = ingest.existsCacheStats.toMap
+    assert(second("index") == ExistsCache.Stats(idxKeys, 0L, idxKeys), s"batch 1: ${second("index")}")
+    assert(second("tagged") == ExistsCache.Stats(2L, 0L, 2L), s"batch 1: ${second("tagged")}")
+  }
+
   test("hashed cache keys dedup like string keys (city64-equivalent option)") {
     val work = Files.createTempDirectory("graft-hashkeys").toString
     val ingest = new StreamingIngest(spark, s"$work/spool", s"$work/tables", s"$work/ckpt",
@@ -378,14 +471,16 @@ class IngestScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming listener feeds engine metrics back into the spool") {
     val (ingest, work) = freshIngest()
     val spool = new SpoolWriter(s"$work/spool", chunkIntervalMs = 100)
-    val listener = new IngestMetricsListener(spool, clock = () => 1625478999L)
+    val listener = new IngestMetricsListener(spool, clock = () => 1625478999L,
+      cacheStats = () => ingest.existsCacheStats)
     spark.streams.addListener(listener)
     try {
       spoolLines(work, Seq("listen.a.b 1.0 1625478240"), nowSec)
       ingest.runAvailableNow()
-      // the listener emits 3 points per progress event, asynchronously
+      // the listener emits 3 points plus 2 per exists-cache (index,
+      // tagged) per progress event, asynchronously
       val deadline = System.currentTimeMillis() + 10000
-      while (spool.pointsWritten.get() < 3 && System.currentTimeMillis() < deadline)
+      while (spool.pointsWritten.get() < 7 && System.currentTimeMillis() < deadline)
         Thread.sleep(50)
       spool.rotate()
       val files = java.nio.file.Files.list(java.nio.file.Paths.get(s"$work/spool"))
@@ -393,6 +488,8 @@ class IngestScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val content = files.map(f => java.nio.file.Files.readString(java.nio.file.Paths.get(f))).mkString
       assert(content.contains("carbon.agents.graft.stream.inputRows"))
       assert(content.contains("carbon.agents.graft.stream.batchDurationMs"))
+      assert(content.contains("carbon.agents.graft.stream.index.cacheNew\t"))
+      assert(content.contains("carbon.agents.graft.stream.tagged.cacheEntries\t0.0\t"))
     } finally {
       spark.streams.removeListener(listener)
       spool.close()
