@@ -2,69 +2,77 @@ package graft.core
 
 import org.apache.spark.SparkContext
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{CountDownLatch, Executors}
+import java.util.concurrent.atomic.AtomicReference
+import scala.util.{Failure, Success, Try}
 
 /**
- * Managed overlap of INDEPENDENT driver-side job chains (guide §2.6:
- * a chain's straggler tail leaves cores idle that the sibling chain's
- * stages can back-fill).
+ * The one way the engine overlaps INDEPENDENT driver-side Spark job
+ * chains (guide §2.6: a chain's straggler tail leaves cores idle that
+ * a sibling chain's stages can back-fill) — the reference's uploader
+ * goroutines under one shared lifecycle (uploader/base.go:65-214).
  *
- * Why not `Future` on the global pool: a bare future holds no Spark
- * job group and nobody awaits it on failure, so when the first chain's
- * `Await.result` rethrows — or a test suite tears the session down —
- * the orphan thread keeps submitting jobs into a stopping
- * SparkContext. That is exactly the round-15 red suite
- * (`RejectedExecutionException` from a Terminated `TaskResultGetter`
- * pool). The contract here closes every leak path:
+ * A bare `Future` holds no Spark job group and nobody awaits it on
+ * failure, so an orphan thread can keep submitting jobs into a
+ * stopping SparkContext (round 15's `RejectedExecutionException`), or
+ * keep appending to a batch dir its replay is rewriting. The contract
+ * here closes every leak path:
  *
- *   - a DEDICATED two-thread pool per call, shut down in `finally`
- *     (never the global ExecutionContext);
- *   - each chain runs under its OWN Spark job group with
- *     `interruptOnCancel = true`, set and cleared on the pool thread
- *     (job-group state is thread-local);
- *   - on either chain's failure the SIBLING's job group is cancelled
- *     and BOTH futures are awaited before control returns — the
- *     caller can never observe a still-running orphan;
- *   - the first failure (by completion order) is rethrown unchanged.
+ *   - a pool per call, one thread per chain, shut down in `finally`;
+ *     its threads are created by the caller, so they inherit the
+ *     caller's Spark local properties (e.g. the streaming batch's);
+ *   - each chain runs under its OWN job group with
+ *     `interruptOnCancel = true`;
+ *   - the first chain to fail (in completion order) cancels every
+ *     sibling's group with `cancelJobGroupAndFutureJobs`, so a sibling
+ *     that sits between jobs submits no further job;
+ *   - an interrupted caller cancels every chain the same way;
+ *   - `all` returns (or throws) only after EVERY chain has settled —
+ *     the caller never observes a still-running chain.
+ *
+ * Chains are not interrupted: a chain in driver-side work between jobs
+ * stops at its next job submission, which fails at once.
  */
 object Concurrent {
 
-  /** Run `fa` and `fb` concurrently as independent Spark job chains;
-    * return both results, or rethrow the first failure after both
-    * threads have settled and the sibling's jobs are cancelled. */
-  private[graft] def both[A, B](sc: SparkContext)(fa: => A, fb: => B): (A, B) = {
-    val pool = Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+  /** Run every chain concurrently as its own Spark job chain; return
+    * their results in order, or rethrow the first failure (by
+    * completion order) once every chain has settled. */
+  private[graft] def all[T](sc: SparkContext)(chains: Seq[() => T]): Seq[T] = {
     val gid = java.util.UUID.randomUUID().toString
-    def chain[T](tag: String, thunk: => T): Future[T] = Future {
-      sc.setJobGroup(s"$gid-$tag", s"concurrent chain $tag", interruptOnCancel = true)
-      try thunk
-      finally sc.clearJobGroup()
-    }
-    val fut1 = chain("a", fa)
-    val fut2 = chain("b", fb)
+    val groups = chains.indices.map(i => s"$gid-$i")
+    val results = new Array[Try[T]](chains.size)
+    val settled = new CountDownLatch(chains.size)
+    val firstFailure = new AtomicReference[Throwable]
+    def cancel(except: Int, why: String): Unit =
+      for ((g, i) <- groups.zipWithIndex if i != except)
+        try sc.cancelJobGroupAndFutureJobs(g, why)
+        catch { case _: Throwable => () }
+
+    val pool = Executors.newFixedThreadPool(math.max(1, chains.size))
     try {
-      // Await BOTH to completion regardless of outcome — settle first,
-      // then rethrow — so no thread outlives this call.
-      val r1 =
-        try Right(Await.result(fut1, Duration.Inf))
-        catch { case e: Throwable => cancelQuiet(sc, s"$gid-b"); Left(e) }
-      val r2 =
-        try Right(Await.result(fut2, Duration.Inf))
-        catch { case e: Throwable => cancelQuiet(sc, s"$gid-a"); Left(e) }
-      (r1, r2) match {
-        case (Right(a), Right(b)) => (a, b)
-        case (Left(e), _)         => awaitQuiet(fut2); throw e
-        case (_, Left(e))         => awaitQuiet(fut1); throw e
+      for ((chain, i) <- chains.zipWithIndex) pool.execute { () =>
+        try {
+          sc.setJobGroup(groups(i), s"concurrent chain $i", interruptOnCancel = true)
+          results(i) = Success(chain())
+        } catch { case e: Throwable =>
+          results(i) = Failure(e)
+          if (firstFailure.compareAndSet(null, e)) cancel(except = i, s"sibling chain $i failed")
+        } finally { sc.clearJobGroup(); settled.countDown() }
+      }
+      try settled.await()
+      catch { case e: InterruptedException =>
+        cancel(except = -1, "the caller was interrupted")
+        awaitUninterruptibly(settled)
+        throw e
       }
     } finally pool.shutdown()
+    Option(firstFailure.get).foreach(e => throw e)
+    results.toSeq.map(_.get)
   }
 
-  private def cancelQuiet(sc: SparkContext, group: String): Unit =
-    try sc.cancelJobGroup(group) catch { case _: Throwable => () }
-
-  private def awaitQuiet(f: Future[_]): Unit =
-    try Await.ready(f, Duration.Inf) catch { case _: Throwable => () }
+  /** The caller rethrows its interrupt once this returns. */
+  private def awaitUninterruptibly(latch: CountDownLatch): Unit =
+    while (latch.getCount > 0)
+      try latch.await() catch { case _: InterruptedException => () }
 }

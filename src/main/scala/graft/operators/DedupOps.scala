@@ -317,8 +317,8 @@ object DedupOps {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    minJaccard: Double, w: Int = 3,
                    maxShingleDf: Long = 10000L): DataFrame = {
-    // Plan shape (A/B'd in tools/JaccardAB, 2.3x faster than a
-    // two-sided self-join at sf0.1): ONE shuffle of the exploded
+    // Plan shape (2.3x faster than a two-sided self-join at sf0.1;
+    // EVIDENCE.md, `d_dedup_jaccard` row): ONE shuffle of the exploded
     // shingle relation groups co-shingled doc ids per 8-byte shingle
     // hash (hashes, not strings — collision odds ~|shingles|^2 / 2^65,
     // immaterial next to any near-dup threshold); the df cap is then a

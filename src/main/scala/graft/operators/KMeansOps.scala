@@ -58,7 +58,8 @@ object KMeansOps {
    * IVF probe list. The fold order (dims left-to-right, double
    * accumulators) is the contract the oracles replay.
    */
-  /** [[cellsUdf]] exposed for the KMeansAB timing tool. */
+  /** [[cellsUdf]] for the IVF cell lookups in [[PqOps]]; its plan A/B
+    * is EVIDENCE.md, "Measured plan fixes" (round 5). */
   private[graft] def cellsUdfPublic(centroids: Array[Array[Double]], n: Int) =
     cellsUdf(centroids, n)
 

@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * resulting candidate pairs; duplicate shingles don't affect minima so
  * the aggregation's array_distinct is immaterial).
  *
- * tools/MinhashAB's earlier negative results (sliced md5, typed
- * Aggregator) replaced the AGG SHAPE but kept the explode+shuffle; this
- * removes the shuffle itself.
+ * The earlier negative results (sliced md5, typed Aggregator;
+ * EVIDENCE.md, MinHash+LSH row) replaced the AGG SHAPE but kept the
+ * explode+shuffle; this removes the shuffle itself.
  */
 object MinhashSig {
 

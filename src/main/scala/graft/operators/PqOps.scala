@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Concurrent
+
 /**
  * Product quantization (PQ) for embedding columns, and the ADC
  * (asymmetric distance computation) top-k search over the codes —
@@ -292,7 +294,7 @@ object PqOps {
    * Direct ADC-only ranking is measurably not enough on this corpus:
    * near-uniform unit vectors concentrate pairwise distances, and at
    * m=8·k=32 the quantization error reorders the top-5 almost freely
-   * (recall@5 ≈ 0.26 measured by PqRecallAB) — but the true top-5
+   * (recall@5 ≈ 0.26; EVIDENCE.md, "PQ ANN" row) — but the true top-5
    * lands inside the 50-candidate ADC shortlist 81% of the time, and
    * the exact re-rank recovers it. `cand` is the recall/cost knob; the
    * shortlist containment curve is in EVIDENCE.md.
@@ -623,13 +625,11 @@ object PqOps {
     // (guide §2.6 overlap) so the second chain's stages back-fill the
     // first one's stragglers — the models themselves are unchanged
     // (each training is deterministic on its own).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centroidsF = Future(KMeansOps.train(corpus, "embedding", ncells, coarseIters, dim))
-    val booksF = Future(trainSubCodebooks(corpus, "id", "embedding", m, k, subDim, pqIters))
-    val centroids = Await.result(centroidsF, Duration.Inf)
-    val books = Await.result(booksF, Duration.Inf)
+    var centroids: Array[Array[Double]] = null
+    var books: Array[Array[Array[Double]]] = null
+    Concurrent.all(corpus.sparkSession.sparkContext)(Seq(
+      () => centroids = KMeansOps.train(corpus, "embedding", ncells, coarseIters, dim),
+      () => books = trainSubCodebooks(corpus, "id", "embedding", m, k, subDim, pqIters)))
     val q0 = queries.localCheckpoint()
     val idx = corpus.select(col("id").as("neighbor_id"),
       element_at(KMeansOps.cellsUdfPublic(centroids, 1)(col("embedding")), 1).as("cell"),
@@ -665,13 +665,12 @@ object PqOps {
     // coarse quantizer (original vectors) and the OPQ rotation chain are
     // independent — overlap them as concurrent driver jobs (guide §2.6);
     // each chain is internally sequential and deterministic on its own
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centroidsF = Future(KMeansOps.train(corpus, "embedding", ncells, coarseIters, dim))
-    val rqF = Future(opqTrainRotationWithSeed(corpus, "id", "embedding", dim, m, k, opqIters))
-    val centroids = Await.result(centroidsF, Duration.Inf)
-    val (rq, seedVecs) = Await.result(rqF, Duration.Inf)
+    var centroids: Array[Array[Double]] = null
+    var rotation: (Array[Array[Long]], Array[Seq[Float]]) = null
+    Concurrent.all(corpus.sparkSession.sparkContext)(Seq(
+      () => centroids = KMeansOps.train(corpus, "embedding", ncells, coarseIters, dim),
+      () => rotation = opqTrainRotationWithSeed(corpus, "id", "embedding", dim, m, k, opqIters)))
+    val (rq, seedVecs) = rotation
     // lazy rotated frame — same rationale as [[opqTopK]]
     val rot = corpus.select(col("id"), col("embedding"),
       rotateUdf(rq)(col("embedding")).as("rv"))

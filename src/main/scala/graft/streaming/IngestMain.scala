@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 
-import graft.core.DropFilter
+import graft.core.{DropFilter, Sessions}
 import graft.sources._
 
 /**
@@ -130,14 +129,7 @@ object IngestMain {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .orElse(cfg.flatMap(_.maxCpu).map(_.toString))
       .getOrElse("4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ingest")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, "graft-ingest")
 
     val ingest = new StreamingIngest(spark, spoolDir, s"$work/tables", s"$work/ckpt",
       blacklist = cfg.flatMap(_.blacklist),

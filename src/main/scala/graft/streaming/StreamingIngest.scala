@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.core.Blacklist
+import graft.core.{Blacklist, Concurrent}
 import graft.operators.GraphiteOps
 
 /**
@@ -248,13 +248,15 @@ final class StreamingIngest(
    * cached batch (materializing the cache in the process); it gates
    * empty batches and lets the tagged/legacy writes be skipped when
    * the batch carries no rows for them. The per-table writes then run
-   * CONCURRENTLY — the reference uploads tables from parallel
-   * per-uploader threads (uploader/base.go:65-214), and the jobs are
-   * independent appends over the shared cached batch; each expansion
-   * table collects its rows and checks them against its exists-cache
-   * (see [[writeNew]]). A failure in any write fails the batch and
-   * commits nothing to the caches; the replay overwrites the same batch
-   * dirs.
+   * CONCURRENTLY, one [[Concurrent.all]] chain each — the reference
+   * uploads tables from parallel per-uploader threads
+   * (uploader/base.go:65-214), and the jobs are independent appends
+   * over the shared cached batch; each expansion table collects its
+   * rows and checks them against its exists-cache (see [[writeNew]]).
+   * A failure in any write (or a stop that interrupts the stream
+   * thread) cancels the sibling writes, settles them all, fails the
+   * batch and commits nothing to the caches; the replay overwrites the
+   * same batch dirs.
    */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val pts = GraphiteOps.withDate(batch, utcDate).cache()
@@ -274,18 +276,16 @@ final class StreamingIngest(
       val cutoffDay = ttlCutoff.toLocalDate.toEpochDay.toInt
       expansions.foreach(_.cache.expire(cutoffDay))
 
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = StreamingIngest.writePool
-
-      val pointWrites = Seq(false, true).map(reverse => Future(writeBatch(
-        GraphiteOps.points(pts, blacklist, reverse = reverse, zeroTimestamp = true)
-          .withColumn("month", date_format(col("date"), "yyyyMM")),
-        if (reverse) pointsReversePath else pointsPath, batchId, Seq("month"), sortCols = Seq("path", "time"))))
+      val pointWrites: Seq[() => Option[Written]] = Seq(false, true).map(reverse => () => {
+        writeBatch(GraphiteOps.points(pts, blacklist, reverse = reverse, zeroTimestamp = true)
+            .withColumn("month", date_format(col("date"), "yyyyMM")),
+          if (reverse) pointsReversePath else pointsPath, batchId, Seq("month"), sortCols = Seq("path", "time"))
+        None
+      })
 
       val tree = treeDate.getOrElse(graft.core.Dates.daysToDate(graft.core.Dates.DefaultTreeDate))
-      def expand(e: Expansion)(rows: => DataFrame) =
-        Future(writeNew(rows.withColumn("udate", udateCol), e, batchId))
+      def expand(e: Expansion)(rows: => DataFrame): () => Option[Written] =
+        () => Some(writeNew(rows.withColumn("udate", udateCol), e, batchId))
       val plain = if (nPlain == 0) Nil else
         expand(indexExp)(GraphiteOps.indexExpandVersioned(pts, tree, disableDailyIndex)) +:
           // legacy graphite-web table types (uploader/uploader.go:47-64),
@@ -297,18 +297,15 @@ final class StreamingIngest(
           }) }
       val tagged = if (nTagged == 0) Nil else
         Seq(expand(taggedExp)(GraphiteOps.taggedExpandVersioned(pts, ignoredTaggedMetrics)))
-      val expansionWrites = plain ++ tagged
 
-      // drain EVERY write before surfacing a failure: rethrowing while a
+      // every write settles before a failure surfaces: rethrowing while a
       // sibling job is still writing would let the batch retry overwrite
       // a dir a zombie task is concurrently appending to
-      val results = (pointWrites ++ expansionWrites).map(f =>
-        Await.ready(f, Duration.Inf).value.get)
-      results.collectFirst { case scala.util.Failure(e) => throw e }
+      val written = Concurrent.all(spark.sparkContext)(pointWrites ++ plain ++ tagged)
+        .flatten.map(w => w.e -> w).toMap
 
       // only now, with every table written, do the batch's keys enter
       // the exists-caches (uploader/cached.go:108-110)
-      val written = expansionWrites.map(_.value.get.get).map(w => w.e -> w).toMap
       expansions.foreach(e => written.get(e) match {
         case Some(w) => e.cache.commit(w.keys, w.checked, batchId)
         case None    => e.cache.commit(Nil, 0L, batchId)
@@ -453,17 +450,4 @@ final class StreamingIngest(
 
 object StreamingIngest {
   private val LegacyTypes = Set("tree", "series", "series-reverse")
-
-  /** Shared pool for the concurrent per-table batch writes (the
-    * reference's per-uploader threads). Daemon threads; sized for the
-    * largest table fan-out of a batch (points, points_reverse, index,
-    * tagged and every legacy table), not the cluster — each task is a
-    * Spark job whose parallelism comes from the executors. */
-  private[streaming] lazy val writePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4 + LegacyTypes.size, r => {
-        val t = new Thread(r, "graft-table-writer")
-        t.setDaemon(true)
-        t
-      }))
 }

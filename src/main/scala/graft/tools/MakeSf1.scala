@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Sessions
 
 /**
  * Derived sf1 builder: the driver ships sf0.001/sf0.01/sf0.1 only, so
@@ -35,14 +37,7 @@ object MakeSf1 {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1graft")
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32, "graft-make-sf1")
 
     val OFF = 1000000000L
     def reps(f: Int => DataFrame): DataFrame = (0 until 10).map(f).reduce(_ union _)

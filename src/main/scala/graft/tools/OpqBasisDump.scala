@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 import graft.operators.PqOps
 
 /** Dumps the OPQ rotation for a corpus as the flat row-major
@@ -16,12 +16,7 @@ object OpqBasisDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(8, "graft-opq-basis-dump")
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
     val flat = PqOps.opqBasisFlat(e, "id", "embedding",

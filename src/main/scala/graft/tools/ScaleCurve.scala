@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.operators.{DedupOps, KMeansOps, SimilarityOps}
 
 /**
@@ -15,14 +16,7 @@ import graft.operators.{DedupOps, KMeansOps, SimilarityOps}
  */
 object ScaleCurve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32, "graft-scale-curve")
 
     // the derived 10x corpus (graft.tools.MakeSf1) joins the curve when
     // present — one more decade for the growth-shape read

@@ -1,27 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The custom expressions registered through SparkSessionExtensions are
   * callable from SQL and agree with the built-ins they accelerate. */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName("graft-ext")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtensionsSpec extends AnyFunSuite with SharedSpark {
 
   test("every query has an oracle and vice versa (the driver's correctness contract)") {
     val q = graft.SparkEntry.queries.keySet

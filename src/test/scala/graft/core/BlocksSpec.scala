@@ -1,8 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SharedSpark
 import graft.operators.DedupOps
 
 /**
@@ -11,22 +10,7 @@ import graft.operators.DedupOps
  * queries, and the pinned set is therefore BOUNDED across an arbitrary
  * sequence of operator calls — the long-lived-driver leak model.
  */
-class BlocksSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-blocks")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BlocksSpec extends AnyFunSuite with SharedSpark {
 
   private def docs = {
     val ss = spark; import ss.implicits._

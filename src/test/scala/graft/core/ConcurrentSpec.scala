@@ -1,63 +1,71 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import graft.SharedSpark
 
 /**
- * Pins the no-orphan contract of [[Concurrent.both]] — the property
- * whose absence made round 15's suite red: when a chain fails (or the
- * whole call is abandoned), NO thread may still be submitting Spark
- * jobs after the call returns. Every test here asserts "both thunks
- * have fully settled by the time both() returns", which is the exact
- * leak path (an orphan future racing a stopping SparkContext).
+ * Pins the no-orphan contract of [[Concurrent.all]]: when a chain fails
+ * or the caller is interrupted, every sibling is cancelled promptly —
+ * whichever chain failed, and even if the sibling sits between jobs —
+ * and NO chain is still running when `all` returns.
+ *
+ * The long chains run fewer partitions than the session has cores
+ * (2 on local[4]), so an un-cancelled chain takes its full 20 s of task
+ * sleep in wall time, and every timing bound sits well under that.
  */
-class ConcurrentSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ConcurrentSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
+  private val uncancelledSec = 20
+  private val promptSec = 6.0
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-concurrent")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** One job of two tasks that each sleep for `uncancelledSec`. */
+  private def longJob(): Long = {
+    val sleepMs = uncancelledSec * 1000L
+    spark.sparkContext.parallelize(1 to 2, 2).map { i => Thread.sleep(sleepMs); i }.count()
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private def secondsSince(t0: Long) = (System.nanoTime() - t0) / 1e9
 
   test("both chains run Spark jobs concurrently and both results return") {
     val sc = spark.sparkContext
-    val (a, b) = Concurrent.both(sc)(
-      sc.parallelize(1 to 1000, 4).map(_ * 2L).sum(),
-      sc.parallelize(1 to 500, 4).map(_.toLong).sum())
+    // each chain waits for the other before its job: a sequential
+    // runner would time the barrier out
+    val barrier = new CyclicBarrier(2)
+    val Seq(a, b) = Concurrent.all(sc)(Seq(
+      () => { barrier.await(10, TimeUnit.SECONDS); sc.parallelize(1 to 1000, 4).map(_ * 2L).sum() },
+      () => { barrier.await(10, TimeUnit.SECONDS); sc.parallelize(1 to 500, 4).map(_.toLong).sum() }))
     assert(a == 1001000.0 && b == 125250.0)
   }
 
-  test("a failing chain rethrows AND the sibling has settled before both() returns") {
+  test("every chain runs in its own job group with the caller's local properties") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.owner", "caller")
+    try {
+      val seen = Concurrent.all(sc)(Seq.fill(3)(() =>
+        (sc.getLocalProperty("graft.spec.owner"), sc.getLocalProperty("spark.jobGroup.id"))))
+      assert(seen.map(_._1) == Seq("caller", "caller", "caller"))
+      assert(seen.map(_._2).distinct.size == 3 && !seen.exists(_._2 == null))
+    } finally sc.setLocalProperty("graft.spec.owner", null)
+  }
+
+  test("a failing chain rethrows after its sibling has settled") {
     val sc = spark.sparkContext
     val siblingSettled = new AtomicBoolean(false)
     val boom = intercept[RuntimeException] {
-      Concurrent.both(sc)(
-        { throw new RuntimeException("chain a dies") }: Unit,
-        {
+      Concurrent.all[Unit](sc)(Seq(
+        () => throw new RuntimeException("chain a dies"),
+        () =>
           try {
             // a multi-job chain: keeps submitting like a training loop
             for (_ <- 1 to 5) sc.parallelize(1 to 200, 4).map { i => Thread.sleep(1); i }.count()
-          } finally siblingSettled.set(true)
-        }: Unit)
+          } finally siblingSettled.set(true)))
     }
     assert(boom.getMessage == "chain a dies")
-    // the no-orphan property: by the time both() has returned, the
-    // sibling thunk is DONE (finished or cancelled) — nothing can race
-    // a later session teardown
-    assert(siblingSettled.get(),
-      "sibling chain must be settled when both() returns")
+    assert(siblingSettled.get(), "sibling chain must be settled when all() returns")
     // and the context is still healthy for the next caller
     assert(sc.parallelize(1 to 10, 2).count() == 10L)
   }
@@ -66,10 +74,9 @@ class ConcurrentSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     val firstSettled = new AtomicBoolean(false)
     val boom = intercept[IllegalStateException] {
-      Concurrent.both(sc)(
-        try sc.parallelize(1 to 100, 2).count()
-        finally firstSettled.set(true),
-        { Thread.sleep(20); throw new IllegalStateException("chain b dies") }: Unit)
+      Concurrent.all[Unit](sc)(Seq(
+        () => try sc.parallelize(1 to 100, 2).count() finally firstSettled.set(true),
+        () => { Thread.sleep(20); throw new IllegalStateException("chain b dies") }))
     }
     assert(boom.getMessage == "chain b dies")
     assert(firstSettled.get())
@@ -81,22 +88,87 @@ class ConcurrentSpec extends AnyFunSuite with BeforeAndAfterAll {
     @volatile var siblingOutcome: Option[Throwable] = None
     val t0 = System.nanoTime()
     intercept[RuntimeException] {
-      Concurrent.both(sc)(
-        { Thread.sleep(50); throw new RuntimeException("fail fast") }: Unit,
-        {
-          try {
-            // ~40 s of task sleep if it ran to completion
-            sc.parallelize(1 to 400, 4).map { i => Thread.sleep(100); i }.count()
-            ()
-          } catch { case e: Throwable => siblingOutcome = Some(e); throw e }
-        }: Unit)
+      Concurrent.all[Unit](sc)(Seq(
+        () => { Thread.sleep(200); throw new RuntimeException("fail fast") },
+        () =>
+          try longJob()
+          catch { case e: Throwable => siblingOutcome = Some(e); throw e }))
     }
-    val elapsedSec = (System.nanoTime() - t0) / 1e9
-    // cancellation must have cut the sibling short: both() returned far
-    // sooner than the sibling's full runtime, and the sibling saw the
-    // cancellation as an exception
-    assert(elapsedSec < 20.0, s"both() took $elapsedSec s — sibling was not cancelled")
+    val elapsed = secondsSince(t0)
+    assert(elapsed < promptSec, s"all() took $elapsed s of the sibling's $uncancelledSec s — it was not cancelled")
     assert(siblingOutcome.nonEmpty, "sibling should have aborted with a cancellation error")
+    assert(sc.parallelize(1 to 10, 2).count() == 10L)
+  }
+
+  test("a later chain failing first cancels an earlier long chain") {
+    val sc = spark.sparkContext
+    @volatile var earlierOutcome: Option[Throwable] = None
+    val t0 = System.nanoTime()
+    val boom = intercept[RuntimeException] {
+      Concurrent.all[Unit](sc)(Seq(
+        () =>
+          try longJob()
+          catch { case e: Throwable => earlierOutcome = Some(e); throw e },
+        () => { Thread.sleep(200); throw new RuntimeException("later chain dies") }))
+    }
+    val elapsed = secondsSince(t0)
+    assert(boom.getMessage == "later chain dies")
+    assert(elapsed < promptSec, s"all() took $elapsed s: the earlier chain ran to completion")
+    assert(earlierOutcome.nonEmpty, "the earlier chain should have aborted with a cancellation error")
+  }
+
+  test("a sibling between jobs submits no further job after the cancel") {
+    val sc = spark.sparkContext
+    val firstJobDone = new CountDownLatch(1)
+    val jobsDone = new AtomicInteger(0)
+    @volatile var siblingOutcome: Option[Throwable] = None
+    val t0 = System.nanoTime()
+    intercept[RuntimeException] {
+      Concurrent.all[Unit](sc)(Seq(
+        () => {
+          firstJobDone.await(10, TimeUnit.SECONDS)
+          throw new RuntimeException("dies while the sibling is between jobs")
+        },
+        () =>
+          try for (_ <- 1 to 5) {
+            sc.parallelize(1 to 4, 2).count()
+            jobsDone.incrementAndGet()
+            firstJobDone.countDown()
+            Thread.sleep(1000) // driver-side work between jobs
+          } catch { case e: Throwable => siblingOutcome = Some(e); throw e }))
+    }
+    assert(jobsDone.get() == 1, s"the sibling ran ${jobsDone.get()} jobs; the cancel should stop it after 1")
+    assert(siblingOutcome.nonEmpty, "the sibling's next job should have failed at submission")
+    assert(secondsSince(t0) < 4.0)
+    assert(sc.parallelize(1 to 10, 2).count() == 10L)
+  }
+
+  test("an interrupted caller cancels and settles every chain") {
+    val sc = spark.sparkContext
+    val started = new CountDownLatch(2)
+    val settled = Seq.fill(2)(new AtomicBoolean(false))
+    @volatile var caught: Option[Throwable] = None
+    @volatile var settledAtReturn: Seq[Boolean] = Nil
+    val caller = new Thread(() =>
+      try Concurrent.all[Unit](sc)(Seq(
+        () => try { started.countDown(); longJob() } finally settled(0).set(true),
+        () =>
+          try {
+            started.countDown()
+            for (_ <- 1 to 40) { sc.parallelize(1 to 2, 2).count(); Thread.sleep(500) }
+          } finally settled(1).set(true)))
+      catch { case e: Throwable => caught = Some(e) }
+      finally settledAtReturn = settled.map(_.get))
+    val t0 = System.nanoTime()
+    caller.start()
+    assert(started.await(10, TimeUnit.SECONDS))
+    Thread.sleep(500) // the long job's tasks are sleeping now
+    caller.interrupt()
+    caller.join(uncancelledSec * 1000L)
+    assert(!caller.isAlive, "all() did not return after the interrupt")
+    assert(secondsSince(t0) < promptSec)
+    assert(caught.exists(_.isInstanceOf[InterruptedException]), s"expected the interrupt, got $caught")
+    assert(settledAtReturn == Seq(true, true), "every chain must be settled when all() returns")
     assert(sc.parallelize(1 to 10, 2).count() == 10L)
   }
 }

@@ -1,31 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the event-time operators: gap-based sessionization
   * (session_window semantics, gap-boundary inclusive/exclusive) and the
   * union-trick as-of join (inclusive bound, tie-break, no-match nulls). */
-class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-event-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EventOpsSpec extends AnyFunSuite with SharedSpark {
 
   test("sessionize: a gap of exactly gapSec still merges; strictly greater splits") {
     val ss = spark; import ss.implicits._

@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the integer-quantized PageRank: symmetric graphs keep the
   * uniform fixed point exactly, a star concentrates rank on the hub by
   * the same integer math as a naive reference, and the result is
   * partition-layout invariant. */
-class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-graph-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraphOpsSpec extends AnyFunSuite with SharedSpark {
 
   /** Naive driver-side replay of the identical integer recurrence. */
   private def reference(edges: Seq[(String, String)], iters: Int,

@@ -2,29 +2,20 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SharedSpark
 import graft.core.Rollup
 import graft.streaming.{SpoolWriter, StreamingIngest}
 
 /** The user-facing query layer over an ingested table layout. */
-class GraphiteTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphiteTablesSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private var tables: GraphiteTables = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-query-layer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
 
     val work = Files.createTempDirectory("graft-qlayer").toString
     val spool = new SpoolWriter(s"$work/spool", chunkIntervalMs = 100)
@@ -43,8 +34,6 @@ class GraphiteTablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     ingest.runAvailableNow()
     tables = new GraphiteTables(spark, s"$work/tables")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val d1 = java.sql.Date.valueOf("2021-07-01")
   private val d2 = java.sql.Date.valueOf("2021-07-31")

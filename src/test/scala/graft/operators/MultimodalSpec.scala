@@ -1,28 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Header-parser goldens (PNG IHDR / JPEG SOFn / WAV fmt, hand-built
   * per the public specs) and the decodeMedia mixed-table pass with its
   * stub fallback. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-multimodal")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MultimodalSpec extends AnyFunSuite with SharedSpark {
 
   private def hx(s: String): Array[Byte] =
     s.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray

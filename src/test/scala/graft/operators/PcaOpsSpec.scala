@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for covariance/PCA: exact-integer covariance vs a naive
   * driver-side replay, partition invariance, Jacobi eigensolver
   * properties, and projection variance ordering. */
-class PcaOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PcaOpsSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pca-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
 

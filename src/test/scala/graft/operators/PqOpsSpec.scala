@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for product quantization: training determinism under
   * repartitioning, code compactness, ADC recall against the exact
   * scan, and the no-UDF codegen shape of the ADC ranking plan. */
-class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PqOpsSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pq-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
     .select(col("vec_id").as("id"), col("embedding"))
@@ -74,7 +60,7 @@ class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("query_id", "neighbor_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     // direct ADC ranking alone reads ~0.26 on this concentrated-distance
-    // corpus (PqRecallAB); the 50-candidate shortlist + exact re-rank is
+    // corpus (EVIDENCE.md, "PQ ANN" row); the 50-candidate shortlist + exact re-rank is
     // what makes PQ usable here
     val recalls = brute.keys.toSeq.map(q => (approx(q) & brute(q)).size.toDouble / 5.0)
     val mean = recalls.sum / recalls.length
@@ -143,7 +129,7 @@ class PqOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = embeddings
     // 25- and 50-query panels (the 5-query canonical set is too small
     // to resolve a 5-point recall delta; measured: pq 0.88/0.84/0.81
-    // vs opq 0.80/0.89/0.86 at nq=5/25/50 — OpqRecallAB)
+    // vs opq 0.80/0.89/0.86 at nq=5/25/50 — EVIDENCE.md, "Round-15 batch 2: OPQ")
     for (nq <- Seq(25, 50)) {
       val queries = e.filter(col("id") < nq)
       val brute = SimilarityOps.bruteForceTopK(queries, e, k = 5)

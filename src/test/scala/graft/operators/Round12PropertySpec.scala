@@ -3,14 +3,17 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.SharedSpark
+
 /**
  * Property hardening for the round-12 pure kernels: TGA RLE
  * round-trips on arbitrary pixel streams (runs, literals, both row
  * orders), G.711 expansion structure over the FULL byte domain, and
  * the URL canonicalizer's variant-collapse contract on generated
- * resources. All JVM-only — no Spark session.
+ * resources. All JVM-only except the canonicalizer, a Column
+ * expression evaluated on the shared session.
  */
-class Round12PropertySpec extends AnyFunSuite {
+class Round12PropertySpec extends AnyFunSuite with SharedSpark {
 
   private def checkProp(prop: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
@@ -129,37 +132,31 @@ class Round12PropertySpec extends AnyFunSuite {
   test("canonicalUrl collapses generated scheme/www/utm/slash/fragment variants") {
     // pure-kernel check via a tiny local DataFrame-free evaluation is
     // not possible (Column API), so evaluate through a one-row Spark
-    // plan — kept in this JVM-only suite because the session is tiny
-    // and shared across cases
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
-    try {
-      import org.apache.spark.sql.functions.col
-      val hostGen = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.take(8).mkString)
-      val pathGen = Gen.listOf(Gen.alphaNumChar).map(cs => "/" + cs.take(10).mkString)
-      val gen = for {
-        host <- hostGen
-        path <- pathGen
-        q <- Gen.oneOf("", "?x=1")
-      } yield (host, path, q)
-      checkProp(Prop.forAll(gen) { case (host, path, q) =>
-        val variants = Seq(
-          s"https://$host.example.com$path$q",
-          s"http://www.$host.example.com$path$q",
-          s"HTTP://${host.toUpperCase}.EXAMPLE.COM$path$q",
-          s"https://$host.example.com$path/$q".replace("/?", "/?"),
-          s"https://$host.example.com$path$q#frag",
-          s"https://$host.example.com$path" +
-            (if (q.isEmpty) "?utm_source=a" else s"$q&utm_campaign=z"))
-        import spark.implicits._
-        val canon = variants.toDF("u")
-          .select(TextOps.canonicalUrl(col("u"))).collect().map(_.getString(0))
-        // the trailing-slash variant only equals the others when path
-        // is non-root; assert the NON-slash variants all collapse
-        val core = canon.patch(3, Nil, 1)
-        core.distinct.length == 1 && core.head.startsWith(host)
-      })
-    } finally spark.stop()
+    // plan on the shared session
+    import org.apache.spark.sql.functions.col
+    val hostGen = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.take(8).mkString)
+    val pathGen = Gen.listOf(Gen.alphaNumChar).map(cs => "/" + cs.take(10).mkString)
+    val gen = for {
+      host <- hostGen
+      path <- pathGen
+      q <- Gen.oneOf("", "?x=1")
+    } yield (host, path, q)
+    checkProp(Prop.forAll(gen) { case (host, path, q) =>
+      val variants = Seq(
+        s"https://$host.example.com$path$q",
+        s"http://www.$host.example.com$path$q",
+        s"HTTP://${host.toUpperCase}.EXAMPLE.COM$path$q",
+        s"https://$host.example.com$path/$q".replace("/?", "/?"),
+        s"https://$host.example.com$path$q#frag",
+        s"https://$host.example.com$path" +
+          (if (q.isEmpty) "?utm_source=a" else s"$q&utm_campaign=z"))
+      import spark.implicits._
+      val canon = variants.toDF("u")
+        .select(TextOps.canonicalUrl(col("u"))).collect().map(_.getString(0))
+      // the trailing-slash variant only equals the others when path
+      // is non-root; assert the NON-slash variants all collapse
+      val core = canon.patch(3, Nil, 1)
+      core.distinct.length == 1 && core.head.startsWith(host)
+    })
   }
 }

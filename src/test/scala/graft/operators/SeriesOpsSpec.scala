@@ -1,31 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the graphite-style series functions: summarize bucket
   * alignment and fns, perSecond reset/zero-dt/head nulls, movingAverage
   * warm-up frames and integer-exact sums. */
-class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-series-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SeriesOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def pts(rows: (String, Double, Long, Long)*) = {
     val ss = spark; import ss.implicits._

@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the KMV distinct sketch: exactness below k, estimate
   * accuracy above k, partition-layout invariance (mergeability), and
   * the bounded-state plan shape (ObjectHashAggregate, partial merge). */
-class SketchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchOpsSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-sketch-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("below k the sketch IS the exact distinct count; duplicates don't inflate it") {
     val ss = spark; import ss.implicits._

@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the round-4 training-data operators: line-level dedup,
   * repetition signals, vocabulary, corpus stats, and the deterministic
   * k-means family (semantic dedup, trained IVF, label centroids). */
-class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TrainingOpsSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-training-ops")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // ---- dedupLines ----
 

@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SharedSpark
 import graft.core.Toml
 
 /**
@@ -15,22 +14,7 @@ import graft.core.Toml
  * e2e boot from a rendered config exercises disable-daily-index and the
  * legacy tree/series/series-reverse uploader types.
  */
-class ConfigSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-config")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ConfigSpec extends AnyFunSuite with SharedSpark {
 
   /** tests/plain/carbon-clickhouse.conf.tpl with its template vars rendered. */
   private val referenceShapedConf =

@@ -2,28 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Streaming corpus ingestion e2e: within-batch dedup, cross-batch
   * exists-cache, quality/language gates, restart persistence. */
-class DocStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-doc-stream")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DocStreamSpec extends AnyFunSuite with SharedSpark {
 
   private def jsonl(dir: String, name: String, docs: Seq[(Long, String)]): Unit = {
     Files.createDirectories(Paths.get(dir))

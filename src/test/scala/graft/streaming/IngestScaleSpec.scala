@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /**
  * Scale-behavior specs for the streaming ingest: TTL-bounded
@@ -15,22 +15,7 @@ import org.scalatest.BeforeAndAfterAll
  * scan, commit only after a batch's writes, per-batch counters),
  * idempotent batch replay, cache clear, and table compaction.
  */
-class IngestScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ingest-scale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IngestScaleSpec extends AnyFunSuite with SharedSpark {
 
   private def nowSec = System.currentTimeMillis() / 1000
 

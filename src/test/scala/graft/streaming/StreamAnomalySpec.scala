@@ -1,28 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Online z-score anomaly specs: prefix-only scoring (a point never
   * vouches for itself), cross-batch state carry under MemoryStream,
   * fold-order determinism, warm-up and constant-series gates. */
-class StreamAnomalySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-anomaly")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamAnomalySpec extends AnyFunSuite with SharedSpark {
 
   private def pts(rows: (String, Long, Long, Double)*) = {
     val ss = spark; import ss.implicits._

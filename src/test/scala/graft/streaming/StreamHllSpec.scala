@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SketchOps
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /**
  * Streaming parity for the HLL register/finisher split: the register
@@ -15,22 +15,7 @@ import org.scalatest.BeforeAndAfterAll
  * was split or ordered. This is the sketch's 100 TB contract run
  * through Structured Streaming for real — not just asserted mergeable.
  */
-class StreamHllSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-hll")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamHllSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming HLL registers: split scrambled overlapping feed; finisher equals one-shot batch") {
     val ss = spark; import ss.implicits._

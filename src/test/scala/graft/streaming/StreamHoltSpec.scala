@@ -1,29 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Online Holt forecast-residual specs: the trend a z-score can't see,
   * prefix-only scoring, cross-batch state carry equal to the batch
   * fold, and fold-order determinism. */
-class StreamHoltSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-holt")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamHoltSpec extends AnyFunSuite with SharedSpark {
 
   private def pts(rows: (String, Long, Long, Double)*) = {
     val ss = spark; import ss.implicits._

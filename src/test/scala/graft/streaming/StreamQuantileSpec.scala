@@ -1,31 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SketchOps
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for the streaming grid-quantile sketch: hand-traced cells,
   * batch ≡ the SketchOps.quantilesFromCells walk, state persistence
   * across micro-batches, tail clipping observability, and order
   * independence (histogram folds commute). */
-class StreamQuantileSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-quantile")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamQuantileSpec extends AnyFunSuite with SharedSpark {
 
   test("hand trace: cells, quantile walk, and the clip counter") {
     val ss = spark; import ss.implicits._

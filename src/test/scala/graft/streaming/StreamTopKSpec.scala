@@ -1,30 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import graft.SharedSpark
 
 /** Specs for Space-Saving streaming top-k: the hand-traced counter
   * dance (takeover inheritance, eviction tie-break), batch ≡ streaming
   * on a split feed, bounded state, and the N/k containment + err
   * overestimate guarantees against exact counts on real corpus text. */
-class StreamTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-topk")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamTopKSpec extends AnyFunSuite with SharedSpark {
 
   test("hand trace: takeover inherits count+1 with err = evicted count") {
     val ss = spark; import ss.implicits._

@@ -4,11 +4,10 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.SharedSpark
 import graft.sources.TcpLineServer
 
 /**
@@ -18,24 +17,14 @@ import graft.sources.TcpLineServer
  * the Structured Streaming job into the four tables, and the reference's
  * verify queries are asserted against its golden outputs.
  */
-class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingE2ESpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
   private var work: java.nio.file.Path = _
 
   override def beforeAll(): Unit = {
+    super.beforeAll()
     work = Files.createTempDirectory("graft-e2e")
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-e2e")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def corpus: Seq[String] = {
     val host = (h: String) =>
