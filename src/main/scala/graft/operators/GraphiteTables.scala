@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraphitePath, Rollup}
+import graft.core.Rollup
+import graft.streaming.Tables
 
 /**
  * User-facing query layer over a StreamingIngest table layout — the
@@ -18,16 +19,27 @@ import graft.core.{GraphitePath, Rollup}
  *    reference's reverse-table design (README:157): `*.cpu.load` is a
  *    suffix scan forward but a prefix scan reversed;
  *  - LWW/rollup views aggregate with single-shuffle max_by / partial
- *    aggs, never window sorts.
+ *    aggs, never window sorts;
+ *  - every table reads through its declared schema ([[Tables]]), so no
+ *    call pays a footer-inference job, and a table not written yet reads
+ *    as empty; the small answers (find, tag browsing, seriesByTag) are
+ *    deduplicated on the driver, one Spark job per call.
  */
 final class GraphiteTables(spark: SparkSession, tablesDir: String) {
 
-  private def read(name: String): DataFrame = spark.read.parquet(s"$tablesDir/$name")
+  def points(): DataFrame = Tables.rawPoints(spark, s"$tablesDir/points")
+  def pointsReverse(): DataFrame = Tables.rawPoints(spark, s"$tablesDir/points_reverse")
+  def index(): DataFrame = Tables.read(spark, s"$tablesDir/index", Tables.Index)
+  def tagged(): DataFrame = Tables.read(spark, s"$tablesDir/tagged", Tables.Tagged)
 
-  def points(): DataFrame = read("points").select("path", "value", "time", "date", "timestamp")
-  def pointsReverse(): DataFrame = read("points_reverse").select("path", "value", "time", "date", "timestamp")
-  def index(): DataFrame = read("index").select("date", "level", "path", "version")
-  def tagged(): DataFrame = read("tagged").select("date", "tag1", "path", "tags", "version")
+  /** The distinct rows of a small answer as a local relation: each scan
+    * task drops its own duplicates and the driver merges what they
+    * return. One job, with the scan's parallelism, instead of a shuffle
+    * (two jobs under AQE); the caller's collect() runs none. */
+  private def distinctOnDriver(df: DataFrame): DataFrame = {
+    val rows = df.mapPartitions(_.distinct)(Encoders.row(df.schema)).collect().distinct
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
 
   /** Dot-segment-wise glob reversal: `*.cpu.load` -> `load.cpu.*`. */
   private[operators] def reverseGlob(glob: String): String =
@@ -56,7 +68,7 @@ final class GraphiteTables(spark: SparkSession, tablesDir: String) {
         GraphiteOps.findGlob(
             idx.filter(col("level") >= 10000 && col("level") < 20000), reverseGlob(glob))
           .select(GraphiteOps.pathReverse(col("path")).as("path"))
-    paths.distinct()
+    distinctOnDriver(paths)
   }
 
   /**
@@ -74,18 +86,9 @@ final class GraphiteTables(spark: SparkSession, tablesDir: String) {
       .select(col("path"),
         (!col("path").endsWith(".")).as("is_leaf"),
         regexp_replace(col("path"), "\\.$", "").as("node"))
-    GraphiteOps.findGlob(tree.withColumnRenamed("path", "_p").withColumnRenamed("node", "path"), glob)
-      .select(col("path"), col("is_leaf"))
-      .distinct()
-  }
-
-  /** Rollup-weighted table read: raw rows weight 1; physically rolled
-    * rows (TableCompactor.rollupPoints) contribute their persisted
-    * sample count so avg re-aggregation stays the true mean. */
-  private def pointsWeighted(name: String): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true").parquet(s"$tablesDir/$name")
-    val w = if (df.columns.contains("points")) coalesce(col("points"), lit(1L)) else lit(1L)
-    df.select(col("path"), col("value"), col("time"), w.as("points"))
+    distinctOnDriver(
+      GraphiteOps.findGlob(tree.withColumnRenamed("path", "_p").withColumnRenamed("node", "path"), glob)
+        .select(col("path"), col("is_leaf")))
   }
 
   private def rangeOver(fwd: => DataFrame, rev: => DataFrame, glob: String,
@@ -116,48 +119,45 @@ final class GraphiteTables(spark: SparkSession, tablesDir: String) {
   def seriesRangeRollup(glob: String, fromSec: Long, untilSec: Long,
                         config: Rollup.Config, nowSec: Long): DataFrame =
     GraphiteOps.rollup(
-      rangeOver(pointsWeighted("points"), pointsWeighted("points_reverse"),
-          glob, fromSec, untilSec)
+      rangeOver(Tables.pointsWeighted(spark, s"$tablesDir/points"),
+          Tables.pointsWeighted(spark, s"$tablesDir/points_reverse"), glob, fromSec, untilSec)
         .select("path", "time", "value", "points"),
       config, nowSec)
 
   /** Distinct tag keys (graphite-web /tags). */
   def tagKeys(): DataFrame =
-    tagged().select(substring_index(col("tag1"), "=", 1).as("key")).distinct()
+    distinctOnDriver(tagged().select(substring_index(col("tag1"), "=", 1).as("key")))
 
   /** Distinct values of one tag key (graphite-web /tags/<key>). */
   def tagValues(key: String): DataFrame =
-    tagged()
+    distinctOnDriver(tagged()
       .filter(col("tag1").startsWith(key + "="))
-      .select(expr(s"substring(tag1, ${key.length + 2})").as("value"))
-      .distinct()
+      .select(expr(s"substring(tag1, ${key.length + 2})").as("value")))
 
   /** Tag-key autocomplete (graphite-web /tags/autoComplete/tags?tagPrefix=):
     * the prefix applies to tag1 itself, so the clustered column prunes. */
   def tagKeys(tagPrefix: String): DataFrame =
-    tagged()
+    distinctOnDriver(tagged()
       .filter(col("tag1").startsWith(tagPrefix))
       .select(substring_index(col("tag1"), "=", 1).as("key"))
-      .filter(col("key").startsWith(tagPrefix)) // prefix must not span the '='
-      .distinct()
+      .filter(col("key").startsWith(tagPrefix))) // prefix must not span the '='
 
   /** Tag-value autocomplete (/tags/autoComplete/values?valuePrefix=):
     * `key=valuePrefix` is a prefix of the clustered tag1 column. */
   def tagValues(key: String, valuePrefix: String): DataFrame =
-    tagged()
+    distinctOnDriver(tagged()
       .filter(col("tag1").startsWith(s"$key=$valuePrefix"))
-      .select(expr(s"substring(tag1, ${key.length + 2})").as("value"))
-      .distinct()
+      .select(expr(s"substring(tag1, ${key.length + 2})").as("value")))
 
   /** Series carrying tag key=value (seriesByTag('key=value')). */
   def seriesByTag(key: String, value: String): DataFrame =
-    GraphiteOps.findByTag(tagged(), key, value).select("path").distinct()
+    distinctOnDriver(GraphiteOps.findByTag(tagged(), key, value).select("path"))
 
   /** Series carrying ALL the given tags (seriesByTag('k1=v1','k2=v2')). */
   def seriesByTags(matchers: Seq[(String, String)]): DataFrame =
-    GraphiteOps.findByTags(tagged(), matchers).select("path").distinct()
+    distinctOnDriver(GraphiteOps.findByTags(tagged(), matchers).select("path"))
 
   /** Full matcher grammar: seriesByTag('env=prod','zone!=u3','dc=~ea.*'). */
   def seriesByTagSpecs(specs: Seq[String]): DataFrame =
-    GraphiteOps.findByTagSpecs(tagged(), specs).select("path").distinct()
+    distinctOnDriver(GraphiteOps.findByTagSpecs(tagged(), specs).select("path"))
 }

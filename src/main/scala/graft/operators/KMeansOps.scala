@@ -125,19 +125,20 @@ object KMeansOps {
     * k*dim model rows. Long sums are order-independent; value-identity
     * to the checkpoint+posexplode+groupBy formulation is pinned by
     * TrainingOpsSpec (fused ≡ reference on the same corpus). */
-  private def lloydPartials(corpus: DataFrame, vecCol: String,
+  private def lloydPartials(corpus: DataFrame, vecCol: String, dim: Int,
                             centroids: Array[Array[Double]]): Array[(Int, Array[Long])] = {
     val cs = centroids
     corpus.select(col(vecCol)).rdd.mapPartitions { it =>
       val acc = new java.util.HashMap[Integer, Array[Long]]()
       it.foreach { r =>
         val v = r.getSeq[Float](0)
+        require(v.length == dim, s"ragged vector: length ${v.length}, expected $dim")
         val cell = assignCellLocal(v, cs)
         var a = acc.get(cell)
-        if (a == null) { a = new Array[Long](v.length + 1); acc.put(cell, a) }
+        if (a == null) { a = new Array[Long](dim + 1); acc.put(cell, a) }
         var d = 0
-        while (d < v.length) { a(d) += math.floor(v(d).toDouble * 1.0e7 + 0.5).toLong; d += 1 }
-        a(v.length) += 1L
+        while (d < dim) { a(d) += math.floor(v(d).toDouble * 1.0e7 + 0.5).toLong; d += 1 }
+        a(dim) += 1L
       }
       import scala.jdk.CollectionConverters._
       acc.asScala.iterator.map { case (c, a) => (c.intValue, a) }
@@ -163,7 +164,7 @@ object KMeansOps {
     var centroids = initCentroids(k, dim)
     for (_ <- 0 until iters) {
       val next = centroids.map(_.clone())
-      lloydPartials(corpus, vecCol, centroids).foreach { case (cell, a) =>
+      lloydPartials(corpus, vecCol, dim, centroids).foreach { case (cell, a) =>
         val n = a(a.length - 1)
         var pos = 0
         while (pos < a.length - 1) {

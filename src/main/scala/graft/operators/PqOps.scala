@@ -183,15 +183,17 @@ object PqOps {
                             books: Array[Array[Array[Double]]])
       : Array[((Int, Int), Array[Long])] = {
     val m = books.length
+    val dim = m * subDim
     val isDouble = corpus.schema(vecCol).dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.DoubleType
     corpus.select(col(vecCol)).rdd.mapPartitions { it =>
       val acc = new java.util.HashMap[(Int, Int), Array[Long]]()
       it.foreach { r =>
-        val at: Int => Double =
-          if (isDouble) { val v = r.getSeq[Double](0); i => v(i) }
-          else { val v = r.getSeq[Float](0); i => v(i).toDouble }
+        val (len, at) =
+          if (isDouble) { val v = r.getSeq[Double](0); (v.length, (i: Int) => v(i)) }
+          else { val v = r.getSeq[Float](0); (v.length, (i: Int) => v(i).toDouble) }
+        require(len == dim, s"ragged vector: length $len, expected $dim")
         var sub = 0
         while (sub < m) {
           val cell = argminCell(at, books(sub), sub, subDim)

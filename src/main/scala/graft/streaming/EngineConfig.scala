@@ -80,8 +80,8 @@ object EngineConfig {
       if (pats.isEmpty) None else Some(new Blacklist(pats))
     }
 
-    /** Union of cache-ttls in days (the anti-join window must cover the
-      * longest-lived cache); reference default is 12h -> 1 day here. */
+    /** Union of cache-ttls in days (the exists-cache window must cover
+      * the longest-lived cache); reference default is 12h -> 1 day here. */
     def cacheTtlDays: Int =
       uploads.flatMap(_.cacheTtlDays).reduceOption(_ max _).getOrElse(1)
 

@@ -114,38 +114,6 @@ final class StreamingIngest(
       .parquet(s"$tableRoot/batch=b$batchId")
   }
 
-  private def tableExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
-  private def readOrEmpty(path: String, canonical: StructType): DataFrame =
-    if (!tableExists(path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], canonical)
-    else
-      try spark.read.parquet(path).select(canonical.fieldNames.map(col).toSeq: _*)
-      catch {
-        // all batch dirs empty (e.g. every row anti-joined away) -> no
-        // footers to infer from; semantically an empty table
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], canonical)
-      }
-
-  private val indexSchema = StructType(Seq(
-    StructField("date", DateType), StructField("level", LongType),
-    StructField("path", StringType), StructField("version", LongType)))
-
-  private val taggedSchema = StructType(Seq(
-    StructField("date", DateType), StructField("tag1", StringType),
-    StructField("path", StringType), StructField("tags", ArrayType(StringType)),
-    StructField("version", LongType)))
-
-  private val pointsSchema = StructType(Seq(
-    StructField("path", StringType), StructField("value", DoubleType),
-    StructField("time", LongType), StructField("date", DateType),
-    StructField("timestamp", LongType)))
-
   private def ttlCutoff: java.sql.Date =
     java.sql.Date.valueOf(java.time.LocalDate.now(java.time.ZoneOffset.UTC).minusDays(cacheTtlDays.toLong))
 
@@ -153,22 +121,9 @@ final class StreamingIngest(
     * `batch` dir of rows uploaded within the TTL window. The literal
     * udate filter prunes table partitions at plan time — this scan must
     * NOT grow with total index history. */
-  private[streaming] def existingKeysWithinTtl(path: String, keys: StructType): DataFrame = {
-    val withDir = StructType(keys.fields ++ Seq(
-      StructField("udate", DateType), StructField("batch", StringType)))
-    if (!tableExists(path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withDir)
-    else
-      try spark.read.parquet(path).filter(col("udate") >= lit(ttlCutoff))
-        .select(withDir.fieldNames.map(col).toSeq: _*)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withDir)
-      }
-  }
-
-  private def keysOf(s: StructType, names: String*): StructType =
-    StructType(names.map(n => s(n)))
+  private[streaming] def existingKeysWithinTtl(path: String, keys: StructType): DataFrame =
+    Tables.read(spark, path, StructType(keys.fields ++ Tables.columns("udate", "batch")))
+      .filter(col("udate") >= lit(ttlCutoff))
 
   /** One expansion table: its root, its key columns and its exists-cache. */
   private final class Expansion(val root: String, val keys: StructType) {
@@ -177,10 +132,10 @@ final class StreamingIngest(
     def keyCols: Seq[String] = keys.fieldNames.toSeq
   }
 
-  private val indexExp = new Expansion(indexPath, keysOf(indexSchema, "date", "level", "path"))
-  private val taggedExp = new Expansion(taggedPath, keysOf(taggedSchema, "date", "tag1", "path"))
+  private val indexExp = new Expansion(indexPath, Tables.columns("date", "level", "path"))
+  private val taggedExp = new Expansion(taggedPath, Tables.columns("date", "tag1", "path"))
   private val legacyExps = legacyTables.toSeq.sorted.map(typ =>
-    typ -> new Expansion(legacyPath(typ), keysOf(indexSchema, "date", "level", "path")))
+    typ -> new Expansion(legacyPath(typ), Tables.columns("date", "level", "path")))
   private def expansions: Seq[Expansion] = indexExp +: taggedExp +: legacyExps.map(_._2)
   private var cachesSeeded = false
 
@@ -387,14 +342,8 @@ final class StreamingIngest(
   }
 
   /** Read view of a live-rollup table. */
-  def liveRollupTable(precisionSec: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("path", StringType), StructField("bucket", LongType),
-      StructField("avg_value", DoubleType), StructField("sum_value", DoubleType),
-      StructField("min_value", DoubleType), StructField("max_value", DoubleType),
-      StructField("points", LongType)))
-    readOrEmpty(s"$tablesDir/points_${precisionSec}s", schema)
-  }
+  def liveRollupTable(precisionSec: Int): DataFrame =
+    Tables.read(spark, s"$tablesDir/points_${precisionSec}s", Tables.LiveRollup)
 
   /** Drain everything currently in the spool, then stop (for tests/backfill). */
   def runAvailableNow(): Unit = {
@@ -408,33 +357,18 @@ final class StreamingIngest(
 
   // ---- read-side views (the ClickHouse table semantics) ----
 
-  def pointsTable(): DataFrame = readOrEmpty(pointsPath, pointsSchema)
-  def pointsReverseTable(): DataFrame = readOrEmpty(pointsReversePath, pointsSchema)
+  def pointsTable(): DataFrame = Tables.rawPoints(spark, pointsPath)
+  def pointsReverseTable(): DataFrame = Tables.rawPoints(spark, pointsReversePath)
 
   /** Rollup-weighted points view: raw rows read with weight 1,
     * physically rolled rows (TableCompactor.rollupPoints) carry their
     * persisted `points` sample count — GraphiteOps.rollup() over this
     * view computes the TRUE mean for a bucket mixing rolled and late
-    * raw rows instead of an average of averages. mergeSchema unifies
-    * the 5-column raw dirs with the 6-column rolled dirs. */
-  def pointsTableWeighted(): DataFrame = {
-    val weightedSchema = StructType(pointsSchema.fields :+ StructField("points", LongType))
-    if (!tableExists(pointsPath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], weightedSchema)
-    else
-      try {
-        val df = spark.read.option("mergeSchema", "true").parquet(pointsPath)
-        val withW =
-          if (df.columns.contains("points")) df.withColumn("points", coalesce(col("points"), lit(1L)))
-          else df.withColumn("points", lit(1L))
-        withW.select(weightedSchema.fieldNames.map(col).toSeq: _*)
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], weightedSchema)
-      }
-  }
-  def indexTable(): DataFrame = readOrEmpty(indexPath, indexSchema)
-  def taggedTable(): DataFrame = readOrEmpty(taggedPath, taggedSchema)
+    * raw rows instead of an average of averages. Raw files lack the
+    * column and read it through the declared schema as null, i.e. 1. */
+  def pointsTableWeighted(): DataFrame = Tables.pointsWeighted(spark, pointsPath)
+  def indexTable(): DataFrame = Tables.read(spark, indexPath, Tables.Index)
+  def taggedTable(): DataFrame = Tables.read(spark, taggedPath, Tables.Tagged)
 
   /** ReplacingMergeTree(Version)-equivalent read view of the index. */
   def indexLatest(): DataFrame =
@@ -445,7 +379,7 @@ final class StreamingIngest(
     GraphiteOps.lwwLatest(taggedTable(), Seq("date", "tag1", "path"), "version", Seq("tags"))
 
   /** Legacy table read view ("tree", "series", "series-reverse"). */
-  def legacyTable(typ: String): DataFrame = readOrEmpty(legacyPath(typ), indexSchema)
+  def legacyTable(typ: String): DataFrame = Tables.read(spark, legacyPath(typ), Tables.Index)
 }
 
 object StreamingIngest {

@@ -11,9 +11,10 @@ import graft.operators.GraphiteOps
 /**
  * Compaction for the streaming tables: per-batch micro-dirs
  * (`batch=b<id>`, one per 1 s trigger) accumulate forever otherwise,
- * degrading both the read views and the TTL anti-join with tiny-file
- * and file-listing overhead. ClickHouse does this as background merges;
- * here it is a two-tier fold over the plain-parquet layout:
+ * degrading the read views and the restart seed of the exists-caches
+ * with tiny-file and file-listing overhead. ClickHouse does this as
+ * background merges; here it is a two-tier fold over the plain-parquet
+ * layout:
  *
  *  - **Online tier** ([[onlineCompact]], called from inside the
  *    streaming job every N batches): folds the `batch=b<id>` dirs with
@@ -68,19 +69,14 @@ object TableCompactor {
       n.startsWith("b") && n.drop(1).toLongOption.exists(_ < fence)
     }
 
-  /** Canonical raw-points projection plus the rollup weight column:
-    * rolled rows (batch=r* heritage) carry their sample count, raw rows
-    * read as weight 1 via mergeSchema+coalesce at the view layer. */
-  private val PointsCols = Seq("path", "value", "time", "date", "timestamp")
-
   private def cDirs(spark: SparkSession, root: String): Seq[Path] =
     batchDirs(spark, root).filter(_.getName.stripPrefix("batch=").startsWith("c"))
 
   /**
    * A dir is "empty" only when an explicit recursive file listing finds
-   * no non-hidden, non-zero data file — a batch whose rows were all
-   * anti-joined away writes just a _SUCCESS marker. Deciding emptiness
-   * by catching AnalysisException from the read (the old scheme) would
+   * no non-hidden, non-zero data file — a batch that wrote no rows
+   * leaves just a _SUCCESS marker. Deciding emptiness by catching
+   * AnalysisException from the read (the old scheme) would
    * let a transient FS/path error masquerade as "all empty" and delete
    * committed dirs; read errors must propagate instead.
    */
@@ -112,7 +108,8 @@ object TableCompactor {
       emptyDirs.foreach(d => f.delete(d, true))
       return emptyDirs.length
     }
-    val df = spark.read.option("basePath", tableRoot).parquet(dataDirs.map(_.toString): _*)
+    val df = Tables.read(spark, tableRoot, Tables.columns(keys ++ payloadCols :+ "version": _*),
+      dataDirs.map(_.toString))
     val compacted = GraphiteOps.lwwLatest(df, keys, "version", payloadCols)
       .withColumn("udate", date_from_unix_date((col("version") / 86400L).cast("int")))
     val stamp = nextStamp()
@@ -136,11 +133,11 @@ object TableCompactor {
       emptyDirs.foreach(d => f.delete(d, true))
       return emptyDirs.length
     }
-    val df = spark.read.option("basePath", tableRoot).parquet(dataDirs.map(_.toString): _*)
+    // raw columns only: rolled batch=r* dirs are never folded here
+    val df = Tables.rawPoints(spark, tableRoot, dataDirs.map(_.toString))
     val stamp = nextStamp()
     val tmp = new Path(tableRoot, s".compact-$stamp")
-    df.select(PointsCols.head, PointsCols.tail: _*)
-      .withColumn("month", date_format(col("date"), "yyyyMM"))
+    df.withColumn("month", date_format(col("date"), "yyyyMM"))
       .repartition(col("month"))
       .sortWithinPartitions(col("path"), col("time"))
       .write.mode("overwrite").partitionBy("month").parquet(tmp.toString)
@@ -234,9 +231,9 @@ object TableCompactor {
    * job (see [[StreamingIngest.processBatch]]): every `batch=b<id>` dir
    * with `id < fence` is committed and immutable, so folding it races
    * with nothing — the stream only ever writes `b<fence>`, and this
-   * runs on the stream's own thread so the next batch's anti-join scan
-   * starts only after the fold finished. c-dirs are size-tiered-folded
-   * when `tier` of them accumulate.
+   * runs on the stream's own thread, after the batch's writes, so no
+   * write of the next batch overlaps a rename. c-dirs are
+   * size-tiered-folded when `tier` of them accumulate.
    *
    * Returns dirs folded per table (b-fold + c-fold combined).
    */
@@ -302,8 +299,8 @@ object TableCompactor {
 
     val stamp = System.currentTimeMillis()
     for ((month, dirs) <- months) {
-      val rows = spark.read.parquet(dirs.map(_.toString): _*)
-      val rolled = GraphiteOps.rollup(rows.select("path", "time", "value"), config, nowSec)
+      val rows = Tables.read(spark, tableRoot, Tables.columns("path", "time", "value"), dirs.map(_.toString))
+      val rolled = GraphiteOps.rollup(rows, config, nowSec)
         .select(
           col("path"), col("value"), col("time"),
           date_from_unix_date((col("time") / 86400L).cast("int")).as("date"),

@@ -13,8 +13,28 @@ import graft.core.Sessions
  * headline list let plan evidence lag the query surface (round 7
  * shipped m_media_phash with no dump); PlansLockstepSpec asserts the
  * one-section-per-query invariant so it cannot recur.
+ *
+ * The dump is reproducible: a run over unchanged code rewrites PLANS.md
+ * byte for byte, so `git diff PLANS.md` shows only real plan changes.
  */
 object PlanDump {
+
+  /** Per-run counters in a plan: expression ids (`#1234`), exchange
+    * `plan_id`s, lambda variable ids (`x_13`), RDD ids and the JVM
+    * names of Scala lambdas (`$Lambda$5969/0x00007f6b...@1babd534`). */
+  private val Counters = Seq("(#)(\\d+)", "(plan_id=)(\\d+)", "(lambda [A-Za-z]+_)(\\d+)", "(RDD\\[)(\\d+)",
+    "(\\$Lambda\\$)(\\d+)/0x\\p{XDigit}+@\\p{XDigit}+").map(_.r)
+
+  /** `plan` with each counter renumbered from 0 in order of first
+    * appearance (a lambda's address and hash dropped): stable across
+    * runs, and two references to one id still read alike. */
+  private def stable(plan: String): String =
+    Counters.foldLeft(plan) { (p, counter) =>
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      counter.replaceAllIn(p, m =>
+        scala.util.matching.Regex.quoteReplacement(m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size)))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
@@ -32,7 +52,7 @@ object PlanDump {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $q\n\n```\n$plan```\n")
+      sb.append(s"\n## $q\n\n```\n${stable(plan)}```\n")
       // queries whose construction eagerly pins blocks (localCheckpoint)
       // must not accumulate across 179 plan builds
       graft.core.Blocks.releaseAll(spark)

@@ -1,7 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -158,5 +161,77 @@ class GraphiteTablesSpec extends AnyFunSuite with SharedSpark {
       .collect().map(_.getString(0)).toSeq == Seq("req.count?dc=west&env=prod"))
     // a matcher with no series yields empty, not an error
     assert(tables.seriesByTags(Seq("env" -> "prod", "dc" -> "north")).isEmpty)
+  }
+
+  /** The Spark jobs `call` starts, counted by job group. A listener
+    * receives events in order, so once a later fence job's start has
+    * arrived, every start of the call has too. */
+  private def jobsOf(call: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val started = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) started.incrementAndGet()
+          else if (g == s"$group-fence") fenced.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted call")
+      call
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(30, TimeUnit.SECONDS), "fence job start never arrived")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("each small answer runs one Spark job, a render at most two") {
+    val cfg = Rollup.Config(Nil, Rollup.Rule("""^""".r, Rollup.Avg, Seq(Rollup.Retention(0, 3600))))
+    val calls = Seq[(String, () => Unit)](
+      "forward find" -> (() => tables.find("web.*.cpu.load", d1, d2).collect()),
+      "reverse find" -> (() => tables.find("*.host1.cpu.load", d1, d2).collect()),
+      "tagValues" -> (() => tables.tagValues("dc").collect()),
+      "seriesByTag" -> (() => tables.seriesByTag("dc", "east").collect()))
+    calls.foreach(_._2()) // warm
+    for ((name, call) <- calls) {
+      val n = jobsOf(call())
+      assert(n == 1, s"$name started $n jobs")
+    }
+    val render = jobsOf(tables.seriesRangeRollup("web.host1.cpu.*", 0L, 4102444800L, cfg, 1625480000L).collect())
+    assert(render <= 2, s"seriesRangeRollup started $render jobs")
+  }
+
+  test("a table not written yet reads as an empty answer, not an error") {
+    // plain series only: the ingest never writes the tagged table
+    val work = Files.createTempDirectory("graft-qlayer-plain").toString
+    val spool = new SpoolWriter(s"$work/spool", chunkIntervalMs = 100)
+    spool.writeLine("web.host1.cpu.load 1.0 1625478240", System.currentTimeMillis() / 1000)
+    spool.close()
+    new StreamingIngest(spark, s"$work/spool", s"$work/tables", s"$work/ckpt").runAvailableNow()
+    assert(!Files.exists(Paths.get(s"$work/tables/tagged")))
+    val plain = new GraphiteTables(spark, s"$work/tables")
+    assert(plain.find("web.*.cpu.load", d1, d2).collect().map(_.getString(0)).toSeq == Seq("web.host1.cpu.load"))
+    assert(plain.tagKeys().collect().isEmpty)
+    assert(plain.tagValues("dc").collect().isEmpty)
+    assert(plain.seriesByTag("dc", "east").collect().isEmpty)
+
+    // a root holding no data files: one table missing, one with only an
+    // empty batch dir
+    val bare = Files.createTempDirectory("graft-qlayer-bare").toString
+    Files.createDirectories(Paths.get(s"$bare/index/batch=b0"))
+    Files.write(Paths.get(s"$bare/index/batch=b0/_SUCCESS"), Array.emptyByteArray)
+    val empty = new GraphiteTables(spark, bare)
+    assert(empty.find("web.*", d1, d2).collect().isEmpty)
+    assert(empty.findTree("web.*").collect().isEmpty)
+    assert(empty.seriesByTag("dc", "east").collect().isEmpty)
+    val cfg = Rollup.Config(Nil, Rollup.Rule("""^""".r, Rollup.Avg, Seq(Rollup.Retention(0, 3600))))
+    assert(empty.seriesRangeRollup("web.*", 0L, 4102444800L, cfg, 1625480000L).collect().isEmpty)
   }
 }

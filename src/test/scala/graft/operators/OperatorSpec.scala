@@ -934,4 +934,16 @@ class OperatorSpec extends AnyFunSuite with SharedSpark {
     assert(agree >= (exact.size * 0.6).toInt,
       s"lsh aligned $agree/${exact.size} sources like exact")
   }
+
+  test("orderedPairs emits C(n,2) pairs of distinct ids; a duplicated id pairs with itself") {
+    val ss = spark; import ss.implicits._
+    def pairs(ids: Seq[Long]): Seq[(Long, Long)] =
+      Seq(ids).toDF("ids").select(explode(DedupOps.orderedPairs("ids")).as("p"))
+        .select("p.id_a", "p.id_b").as[(Long, Long)].collect().toSeq.sorted
+    assert(pairs(Seq(3L, 1L, 2L)) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    // callers pass distinct ids (the doc's requirement): a duplicate is
+    // not guarded in the expression, it yields an (a, a) pair and
+    // repeats its pairs with the other ids
+    assert(pairs(Seq(1L, 1L, 2L)) == Seq((1L, 1L), (1L, 2L), (1L, 2L)))
+  }
 }

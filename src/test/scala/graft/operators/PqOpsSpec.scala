@@ -228,4 +228,14 @@ class PqOpsSpec extends AnyFunSuite with SharedSpark {
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"IVF+PQ must stay equi-join shaped:\n$plan")
   }
+
+  test("sub-codebook training rejects a ragged vector") {
+    val ss = spark; import ss.implicits._
+    // the ragged row is not among the k lowest ids the init seeds from
+    val e = Seq((0L, Seq.fill(8)(0.5f)), (1L, Seq.fill(8)(0.25f)), (2L, Seq.fill(7)(0.75f)))
+      .toDF("id", "embedding")
+    val err = intercept[Exception](PqOps.trainSubCodebooks(e, "id", "embedding", m = 2, k = 2, subDim = 4, iters = 1))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("ragged vector: length 7, expected 8")), messages)
+  }
 }

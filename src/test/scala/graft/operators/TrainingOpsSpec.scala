@@ -2285,4 +2285,12 @@ class TrainingOpsSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
     assert(out.toSeq == Seq((5L, "en", "en", 1L), (10L, "de", "de", 1L)))
   }
+
+  test("kmeans training rejects a ragged vector instead of sizing sums by the first one") {
+    val ss = spark; import ss.implicits._
+    val e = Seq(Seq.fill(64)(0.5f), Seq.fill(63)(0.25f)).toDF("embedding")
+    val err = intercept[Exception](KMeansOps.train(e, "embedding", k = 2, iters = 1, dim = 64))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("ragged vector: length 63, expected 64")), messages)
+  }
 }
